@@ -370,7 +370,9 @@ SF1_SUBSET = [
 def _bench_sf1_subset(
     spark, registry, out: dict, sf_dir: str, full_run: bool
 ) -> None:
-    """Time SF1_SUBSET at the manufactured sf1 into out["sf1_*"].
+    """Time SF1_SUBSET at the manufactured sf1 and print the times as
+    their own JSON line (``sf1_cpus``/``sf1_queries``/``sf1_total``),
+    ahead of the contract line; ``out`` is only read for its ``sf``.
 
     Runs only on a full HEADLINE pass over the standard sf0.1 dir
     (--only iteration runs and foreign SF dirs skip it), and can be

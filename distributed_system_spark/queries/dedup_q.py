@@ -2678,7 +2678,10 @@ def _substr_dup_positions(
     buffered by WindowExec's spilling row array instead of streamed
     by the join — bounded by the same per-key position count the SMJ
     sort already paid, and the disk-valved paths keep the broadcast
-    join form."""
+    join form.  The two forms agree only while ``h`` is never null
+    (the join drops null keys, the window keeps them); the md5 of a
+    non-null shingle never is, and test_substr_shingle_hash_never_null
+    pins it."""
     if broadcast_hot:
         hot = (
             pos.groupBy("h")

@@ -15,8 +15,17 @@ Spark-native mapping (not a port):
 - append    → ``mode("append")`` write (each append = new part files,
               exactly the reference's new-piece semantics)
 - get       → ``spark.read`` over the directory (Spark concatenates)
-- metadata  → a ``_metadata.json`` sidecar (the reference's per-file
-              map; Spark table properties at catalog scale)
+- metadata  → a ``_dss_metadata.json`` sidecar (the reference's
+              per-file map; Spark table properties at catalog scale).
+              It also records the piece count and, for parquet, the
+              dataset's on-disk ``schema`` (``df.schema`` made
+              nullable, as Spark writes it), which ``get`` hands to
+              the reader so no schema-inference job runs.  ``put``
+              records it; ``append`` keeps it only if the new piece's
+              on-disk schema is the same, else drops it; ``compact``
+              records the rewritten dataset's.  Without a recorded
+              schema (text stores, sidecar-less datasets, after a
+              schema-changing append) Spark infers it, as it would.
 - ls_files / ls_dirs / get_num_shards → filesystem listing
 
 Atomicity/exactly-once (the reference's append-permission protocol,
@@ -40,6 +49,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _META_NAME = "_dss_metadata.json"
 _EVENTS_DIR = "_dss_events"
@@ -176,20 +186,29 @@ class DatasetStore:
         return self._fs.exists(self._abs(path))
 
     # -- op event log (mock_sdfs_master.cpp:35-111) -------------------
-    def _log_event(self, op: str, path: str, piece: int | None = None) -> None:
+    def _log_event(
+        self,
+        op: str,
+        path: str,
+        piece: int | None = None,
+        metadata: dict[str, str] | None = None,
+    ) -> None:
         """Append one event file per operation to ``_dss_events/`` —
         the Spark-first form of the reference's op callbacks
         (on_put/on_append/on_get/on_del, mock_sdfs_master.cpp:35-111):
         a file-source stream over the log IS the callback delivery,
         and filtering on metadata keys reproduces the watched-key
         subscription.  One file per event so each microbatch sees
-        exactly the new ops."""
+        exactly the new ops.  ``metadata`` is the dataset's user map
+        when the caller has already read the sidecar."""
+        if metadata is None:
+            metadata = self.get_metadata(path) if self.exists(path) else {}
         event = {
             "op": op,
             "path": path,
             "piece": piece,
             "ts": time.time_ns(),
-            "metadata": self.get_metadata(path) if self.exists(path) else {},
+            "metadata": metadata,
         }
         log_dir = self.events_path()
         self._fs.mkdirs(log_dir)
@@ -208,7 +227,9 @@ class DatasetStore:
         pieces to 1, mock_sdfs_client.cpp:102-110)."""
         writer = df.write.format(self.fmt).mode("overwrite")
         writer.save(self._abs(path))
-        self._write_sidecar(path, pieces=1, user=metadata or {})
+        self._write_sidecar(
+            path, pieces=1, user=metadata or {}, schema=self._disk_schema(df)
+        )
         self._log_event("put", path, piece=0)
 
     def append(self, df: DataFrame, path: str, metadata: dict[str, str] | None = None) -> None:
@@ -218,14 +239,24 @@ class DatasetStore:
         dataset (the reference serializes via its master; Spark jobs
         via the driver). Concurrent appends from separate drivers
         need external coordination.
+
+        The recorded schema survives only an append whose on-disk
+        schema equals it; any other append drops it, so ``get`` falls
+        back to Spark's own inference over the mixed pieces.
         """
         df.write.format(self.fmt).mode("append").save(self._abs(path))
         side = self._read_sidecar(path)
         user = side.get("user", {})
         if metadata:
             user.update(metadata)
+        schema = side.get("schema")
+        if schema != self._disk_schema(df):
+            schema = None
         self._write_sidecar(
-            path, pieces=int(side.get("pieces", 0)) + 1, user=user
+            path,
+            pieces=int(side.get("pieces", 0)) + 1,
+            user=user,
+            schema=schema,
         )
         # reference passes index = num_pieces - 1 to append callbacks
         self._log_event("append", path, piece=int(side.get("pieces", 0)))
@@ -272,13 +303,24 @@ class DatasetStore:
         self._fs.rename(final, old)
         self._fs.rename(staged, final)
         self._fs.delete(old)
-        self._write_sidecar(path, pieces=1, user=meta)
+        # every rewritten file carries the read's schema, whether it
+        # was recorded or inferred
+        self._write_sidecar(
+            path, pieces=1, user=meta, schema=self._disk_schema(df)
+        )
         return before
 
     def get(self, path: str) -> DataFrame:
-        """Read the dataset; Spark concatenates all pieces/part-files."""
-        df = self.spark.read.format(self.fmt).load(self._abs(path))
-        self._log_event("get", path)
+        """Read the dataset; Spark concatenates all pieces/part-files.
+
+        With a schema recorded in the sidecar the reader is given it,
+        so the read launches no schema-inference job."""
+        side = self._read_sidecar(path)
+        reader = self.spark.read.format(self.fmt)
+        if "schema" in side:
+            reader = reader.schema(StructType.fromJson(side["schema"]))
+        df = reader.load(self._abs(path))
+        self._log_event("get", path, metadata=side.get("user", {}))
         return df
 
     def delete(self, path: str) -> None:
@@ -339,15 +381,29 @@ class DatasetStore:
         )
 
     # -- metadata (sdfs.h:8; mock_sdfs_client.cpp:204, 245) ------------
+    def _disk_schema(self, df: DataFrame) -> dict | None:
+        """The schema a parquet write of ``df`` leaves on disk (every
+        field, element and value nullable), as sidecar JSON; None for
+        other formats."""
+        if self.fmt != "parquet":
+            return None
+        return df.schema.toNullable().jsonValue()
+
     def _write_sidecar(
-        self, path: str, pieces: int, user: dict[str, str]
+        self,
+        path: str,
+        pieces: int,
+        user: dict[str, str],
+        schema: dict | None = None,
     ) -> None:
         self._fs.mkdirs(self._abs(path))
+        side = {"pieces": pieces, "user": user}
+        if schema is not None:
+            side["schema"] = schema
         # Temp-file + rename mirrors the reference's atomic metadata
         # write protocol (mock_sdfs_client.cpp:192-202).
         self._fs.replace_text(
-            f"{self._abs(path)}/{_META_NAME}",
-            json.dumps({"pieces": pieces, "user": user}),
+            f"{self._abs(path)}/{_META_NAME}", json.dumps(side)
         )
 
     def _read_sidecar(self, path: str) -> dict:

@@ -21,3 +21,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: how many Spark jobs ``fn()`` launches.
+
+    Runs ``fn`` in a fresh job group, then one sentinel job in a group
+    of its own.  The status tracker learns of jobs from the listener
+    bus, in order, so once the sentinel shows, every job ``fn``
+    started shows too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def count(fn) -> int:
+        group, sentinel = (f"count-jobs-{uuid.uuid4().hex}" for _ in "ab")
+        try:
+            sc.setJobGroup(group, "count_jobs")
+            fn()
+            sc.setJobGroup(sentinel, "count_jobs sentinel")
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(sentinel):
+            assert time.monotonic() < deadline, "sentinel job never showed"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count

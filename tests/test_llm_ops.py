@@ -1068,6 +1068,50 @@ def test_substr_dup_positions_window_twin(spark, sf_dir):
     assert got_bc == want
 
 
+
+def test_substr_shingle_hash_never_null(spark, sf_dir):
+    """The window form of _substr_dup_positions equals the join form
+    only while the shingle hash ``h`` is never null: an inner join on
+    h drops null keys, a window over them keeps them.  Pin that on the
+    test documents plus the edge texts (null, empty, shorter than one
+    shingle, exactly one shingle, empty tokens): every position has a
+    hash, and the positions are exactly n - 7 per text of n >= 8
+    tokens."""
+    from distributed_system_spark.queries.dedup_q import (
+        _substr_corpus,
+        _substr_dup_positions,
+        _substr_positions_from_corpus,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    texts = [None, "", "a b c d e f g", "a b c d e f g h", "a  b   c d e f g h i"]
+    edge_ids = [10**9 + 2 + k for k in range(len(texts))]
+    edge = spark.createDataFrame(
+        list(zip(edge_ids, texts)), "doc_id long, text string"
+    )
+    t, pos = _substr_positions_from_corpus(
+        _substr_corpus(docs.unionByName(edge))
+    )
+    assert pos.filter(F.col("h").isNull()).count() == 0
+    want = t.select(F.sum(F.greatest(F.col("n") - 7, F.lit(0)))).first()[0]
+    assert pos.count() == want
+    edge_pos = pos.filter(F.col("doc_id") >= edge_ids[0])
+    assert sorted((r["doc_id"], r["j"]) for r in edge_pos.collect()) == [
+        (i, j)
+        for i, text in zip(edge_ids, texts)
+        if text is not None
+        for j in range(1, len(text.split(" ")) - 6)
+    ]
+    hot = (
+        pos.groupBy("h")
+        .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
+        .filter(F.col("mn") != F.col("mx"))
+        .select("h")
+    )
+    assert sorted(map(tuple, _substr_dup_positions(pos).collect())) == sorted(
+        map(tuple, pos.join(hot, "h").select("doc_id", "j").collect())
+    )
+
 def test_substring_chains_planted_quote_recall(spark, sf_dir):
     """dedup_substring_chains: every planted doc (doc_id % 10 == 1
     appends tokens 4..18 of its predecessor, 15 tokens at an

@@ -310,3 +310,77 @@ def test_corrupt_json_records_permissive_vs_failfast(spark, tmp_path):
     )
     with pytest.raises(Py4JJavaError):
         strict.collect()
+
+
+def test_load_table_reuses_schema_until_file_changes(
+    spark, tmp_path, count_jobs
+):
+    """load_table remembers a local file's inferred schema: a second
+    load of the unchanged file launches no job, and a rewrite at the
+    same path with a different schema is read with the new one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "orders.parquet"
+    pq.write_table(pa.table({"o_orderkey": pa.array([1, 2], pa.int64())}), path)
+    first = load_table(spark, str(tmp_path), "orders")
+    assert first.columns == ["o_orderkey"]
+    assert count_jobs(lambda: load_table(spark, str(tmp_path), "orders")) == 0
+
+    pq.write_table(
+        pa.table(
+            {
+                "o_orderkey": pa.array([3], pa.int32()),
+                "o_comment": pa.array(["new"]),
+            }
+        ),
+        path,
+    )
+    again = load_table(spark, str(tmp_path), "orders")
+    assert again.schema == spark.read.parquet(str(path)).schema
+    assert [tuple(r) for r in again.collect()] == [(3, "new")]
+
+
+def test_load_events_types_ts_per_nanos_conf(spark, tmp_path):
+    """A schema remembered under nanosAsLong=true (ts as bigint) is not
+    reused once the conf changes: the read then fails as Spark's own
+    inference does, instead of silently reading nanos as longs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from distributed_system_spark.sources.tables import (
+        load_events,
+        read_parquet,
+        table_path,
+    )
+
+    path = table_path(str(tmp_path), "events")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array([5_000, 9_000], pa.timestamp("ns")),
+            }
+        ),
+        path,
+    )
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf, None)
+    try:
+        ev = load_events(spark, str(tmp_path))
+        assert dict(ev.dtypes)["ts_ns"] == "bigint"
+        assert sorted(r["ts_ns"] for r in ev.collect()) == [5_000, 9_000]
+        spark.conf.set(conf, "false")
+        with pytest.raises(AnalysisException):
+            spark.read.parquet(path)
+        with pytest.raises(AnalysisException):
+            read_parquet(spark, path)
+        ev = load_events(spark, str(tmp_path))  # sets the conf again
+        assert dict(ev.dtypes)["ts_ns"] == "bigint"
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)

@@ -245,3 +245,148 @@ def test_key_escaping_reference_parity(store, spark):
     for k in keys:
         store.delete(f"keyed/{escape_key(k)}")
     assert store.ls_files("keyed") == []
+
+
+def _typed_frame(spark, ids):
+    """Non-null columns of every type the parquet writer maps
+    specially: decimals, dates, both timestamp kinds, binary, and
+    nested array/map/struct values."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        ArrayType,
+        BinaryType,
+        DateType,
+        DecimalType,
+        IntegerType,
+        LongType,
+        MapType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampNTZType,
+        TimestampType,
+    )
+
+    schema = StructType(
+        [
+            StructField("i", IntegerType(), False),
+            StructField("l", LongType(), False),
+            StructField("d", DecimalType(12, 2), False),
+            StructField("day", DateType(), False),
+            StructField("ts", TimestampType(), False),
+            StructField("ntz", TimestampNTZType(), False),
+            StructField("b", BinaryType(), False),
+            StructField("s", StringType(), False),
+            StructField("arr", ArrayType(IntegerType(), False), False),
+            StructField(
+                "m", MapType(StringType(), LongType(), False), False
+            ),
+            StructField(
+                "st",
+                StructType(
+                    [
+                        StructField("x", IntegerType(), False),
+                        StructField("y", ArrayType(StringType(), False), False),
+                    ]
+                ),
+                False,
+            ),
+        ]
+    )
+    base = dt.datetime(2024, 3, 1, 12, 30, 15, 123456)
+    rows = [
+        (
+            k,
+            k * 10**10,
+            Decimal(f"{k}.25"),
+            dt.date(2024, 1, 1) + dt.timedelta(days=k),
+            base + dt.timedelta(seconds=k),
+            base + dt.timedelta(minutes=k),
+            bytes([k % 256, 7]),
+            f"s{k}",
+            [k, k + 1],
+            {f"k{k}": k},
+            (k, [f"y{k}"]),
+        )
+        for k in ids
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+def _rows(df):
+    return df.orderBy("i").collect()
+
+
+def test_recorded_schema_matches_spark_inference(spark, tmp_path):
+    """put records the on-disk schema, an append of the same schema
+    keeps it, and get reads with it: same schema and rows as Spark's
+    own inferred read of the directory, through compact too."""
+    store = DatasetStore(spark, str(tmp_path / "store"))
+    store.put(_typed_frame(spark, range(0, 5)), "t")
+    store.append(_typed_frame(spark, range(5, 9)), "t")
+    inferred = spark.read.parquet(str(tmp_path / "store" / "t"))
+    assert store._read_sidecar("t")["schema"] == inferred.schema.jsonValue()
+    got = store.get("t")
+    assert got.schema == inferred.schema
+    assert _rows(got) == _rows(inferred)
+    assert len(_rows(got)) == 9
+
+    store.compact("t")
+    inferred = spark.read.parquet(str(tmp_path / "store" / "t"))
+    assert store._read_sidecar("t")["schema"] == inferred.schema.jsonValue()
+    assert store.get("t").schema == inferred.schema
+    assert _rows(store.get("t")) == _rows(inferred)
+
+
+def test_schema_changing_append_falls_back_to_inference(spark, tmp_path):
+    """An append whose on-disk schema differs drops the recorded one,
+    so get reads exactly as Spark's inference does."""
+    store = DatasetStore(spark, str(tmp_path / "store"))
+    base = spark.range(4).selectExpr("id", "id * 2 AS v")
+    store.put(base, "t")
+    store.append(base.selectExpr("id", "v", "'x' AS extra"), "t")
+    assert "schema" not in store._read_sidecar("t")
+    inferred = spark.read.parquet(str(tmp_path / "store" / "t"))
+    got = store.get("t")
+    assert got.schema == inferred.schema
+    order = got.columns
+    assert got.orderBy(*order).collect() == inferred.orderBy(*order).collect()
+
+
+def test_reads_without_recorded_schema_unchanged(spark, tmp_path):
+    """A dataset written around the store (no sidecar) and a text
+    store's datasets read as Spark reads them."""
+    store = DatasetStore(spark, str(tmp_path / "store"))
+    foreign = str(tmp_path / "store" / "foreign")
+    spark.range(3).write.parquet(foreign)
+    assert store._read_sidecar("foreign") == {}
+    assert store.get("foreign").schema == spark.read.parquet(foreign).schema
+    assert sorted(store.get("foreign").collect()) == sorted(
+        spark.read.parquet(foreign).collect()
+    )
+
+    text = DatasetStore(spark, str(tmp_path / "text"), fmt="text")
+    text.put(_text_df(spark, "a", "b"), "f")
+    text.append(_text_df(spark, "c"), "f")
+    assert "schema" not in text._read_sidecar("f")
+    assert text.get("f").schema == spark.read.text(
+        str(tmp_path / "text" / "f")
+    ).schema
+    assert sorted(r["value"] for r in text.get("f").collect()) == [
+        "a",
+        "b",
+        "c",
+    ]
+
+
+def test_get_with_recorded_schema_launches_no_job(spark, tmp_path, count_jobs):
+    """get hands the recorded schema to the reader, so building the
+    frame runs no schema-inference job; a dataset without one still
+    does (the control that shows the count can see that job)."""
+    store = DatasetStore(spark, str(tmp_path / "store"))
+    store.put(spark.range(10), "t")
+    assert count_jobs(lambda: store.get("t")) == 0
+    spark.range(10).write.parquet(str(tmp_path / "store" / "foreign"))
+    assert count_jobs(lambda: store.get("foreign")) >= 1
