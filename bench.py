@@ -424,45 +424,12 @@ def _bench_sf1_subset(
     )
 
 
-def _recover_times_from_tail(tail: str) -> dict[str, float]:
-    """Salvage per-query seconds from a TRUNCATED bench record: the
-    driver keeps only the last 2000 chars of output, and round 8's
-    41-query line overflowed that (parsed == {}).  The times live in
-    the `"queries": {...}` region — anchor on that key when it
-    survived the truncation (the current key order emits it AFTER
-    "sf", so the old cut-at-"sf" heuristic would discard everything);
-    in a tail whose "queries" key itself was truncated away, fall
-    back to cutting at whichever delta/retime section key survives so
-    delta RATIOS (same query names, different values) can't be
-    mistaken for seconds.  Separator-tolerant: matches both the old
-    `": "` spacing and the current compact `":"` output."""
-    import re
-
-    region = tail
-    if '"queries"' in region:
-        # rsplit: the r14 sf1 line (printed BEFORE the contract line)
-        # contains '"sf1_queries"', whose tail substring would match a
-        # left split — the LAST '"queries"' is the contract line's.
-        region = region.rsplit('"queries"', 1)[1]
-    # Cut at every scalar/section key that can follow the queries map
-    # in either key order ("value" follows it in the current output,
-    # "sf" followed it in the old) — each is a number or a ratio map
-    # the seconds regex would otherwise swallow.
-    for stop in ('"deltas"', '"retimes"', '"regressions"', '"value"', '"sf"'):
-        region = region.split(stop, 1)[0]
-    return {
-        m.group(1): float(m.group(2))
-        for m in re.finditer(r'"([a-z][a-z0-9_]+)":\s*([0-9.]+)', region)
-    }
-
-
 def _latest_prior_times() -> tuple[dict[str, float], dict[str, int]]:
     """Per-query seconds from the newest BENCH_r{N}.json the driver
     recorded, for round-over-round regression tracking, PLUS the
-    best_of each query's prior time was measured under.  A newer
-    round whose JSON line was truncated by the driver's capture
-    window contributes what its tail can recover, backfilled from
-    the newest fully-parsed round.
+    best_of each query's prior time was measured under.  Only the
+    harness's ``parsed`` record counts; a round whose line did not
+    parse contributes nothing, and older rounds backfill its names.
 
     The best_of map exists because min-of-N times are systematically
     below single-shot times by the whole JVM/harness noise band
@@ -486,11 +453,6 @@ def _latest_prior_times() -> tuple[dict[str, float], dict[str, int]]:
             parsed = rec.get("parsed") or {}
             queries = parsed.get("queries") or {}
             bo = parsed.get("best_of")
-            if not queries:
-                tail = rec.get("tail") or ""
-                queries = _recover_times_from_tail(tail)
-                bom = re.search(r'"best_of":\s*(\d+)', tail)
-                bo = int(bom.group(1)) if bom else bo
         except (OSError, json.JSONDecodeError):
             continue
         if queries:

@@ -396,45 +396,6 @@ def jaccard_verify_sets(
     ).filter(F.col("jaccard") >= threshold)
 
 
-_STAGE_ROOTS: set[str] = set()
-_STAGE_SEQ = iter(range(1, 1 << 30))
-
-
-def materialize(df: DataFrame, label: str = "sets") -> DataFrame:
-    """Materialize a multi-consumer table once (guide §1.2/§5).
-
-    Default: ``localCheckpoint()`` — the fastest local form (parquet
-    staging measured +10% on the dedup_minhash_ctrl shape at sf0.1
-    local[4]).  With ``SPARK_GRAFT_SETS_STAGING=parquet`` the table
-    is written to a per-process scratch directory and read back
-    instead: measured NEUTRAL at sf1 local[4] (mins 12.73 vs 12.96,
-    parquet lower in all 3 rounds) and the right valve at real scale
-    — localCheckpoint blocks are non-replicated (one executor loss
-    kills the query on a cluster) and compete with execution memory
-    (guide §5; the r13 bench-pollution finding), while the parquet
-    staging is zstd-columnar on storage and recomputable per read.
-    The disk-valved sliced forms already hard-code this pattern;
-    this knob extends it to the one-shot forms without changing the
-    benched default plan.
-    """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SETS_STAGING", "local") != "parquet":
-        return df.localCheckpoint()
-    import atexit
-    import shutil
-
-    spark = df.sparkSession
-    root = f"/tmp/dss-sets-stage-p{os.getpid()}"
-    if root not in _STAGE_ROOTS:
-        shutil.rmtree(root, ignore_errors=True)
-        _STAGE_ROOTS.add(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    path = f"{root}/{label}-{next(_STAGE_SEQ)}"
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.schema(df.schema).parquet(path)
-
-
 def doc_token_sets(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

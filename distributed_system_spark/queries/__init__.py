@@ -16,8 +16,12 @@ outputs diffed order-insensitively after an external ``sort``
 from __future__ import annotations
 
 import importlib
+import itertools
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -74,655 +78,12 @@ def register(
     return deco
 
 
-# Queries that have already had a green row in an external harness
-# window (rounds 1–3 union).  A prefix-sampling consumer capped at N
-# queries sees the NOT-yet-verified ones first, so over successive
-# windows the whole registry accumulates verified coverage; queries
-# added after this list was frozen are automatically prioritized.
-_EXTERNALLY_VERIFIED = frozenset(
-    {
-        "agg_percentiles", "agg_stats", "ann_ivf_topk", "ann_lsh_topk",
-        "ann_topk_cosine", "argmax_order", "case_when_tiers",
-        "count_distinct", "cube_agg", "date_funcs", "dedup_exact",
-        "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-        "distinct_pairs", "filter_like", "funnel_stages", "grouping_sets",
-        "join_broadcast", "join_semi", "join_shuffle_hash",
-        "join_sortmerge", "mad_robust_spread", "math_funcs",
-        "mj_wordcount", "mm_binary_meta", "mm_feature_extract",
-        "mm_frame_sample", "multi_format_scan", "not_in_subquery",
-        "pipe_tokens", "pivot_status", "posexplode_tokens",
-        "price_histogram", "proj_filter", "q10_returned_items",
-        "q11_important_parts", "q12_priority_classes",
-        "q13_customer_distribution", "q14_promo_share", "q15_top_supplier",
-        "q16_supplier_part_counts", "q17_small_quantity",
-        "q18_large_volume", "q19_disjunctive_filter", "q1_pricing",
-        "q20_part_shippers", "q21_waiting_supplier",
-        "q2_min_cost_supplier", "q3_shipping_priority",
-        "q4_order_priority", "q5_local_supplier_volume",
-        "q6_revenue_forecast", "q7_nation_trade", "q8_market_share",
-        "q9_product_profit", "retention_cohorts", "rollup_agg",
-        "rollup_grouping_id", "sample_deterministic", "scalar_subquery",
-        "sessionize_events", "set_except", "set_except_all",
-        "set_intersect", "set_intersect_all", "set_union", "skew_report",
-        "string_funcs", "text_langid", "text_quality", "text_token_count",
-        "try_cast_tokens", "ts_gapfill_locf",
-        "ts_rollup_daily_from_hourly", "udf_grouped_agg",
-        "udf_pandas_scalar", "udf_python_row", "union_by_name",
-        "unpivot_metrics", "win_session", "win_sliding", "win_tumbling",
-        "window_lag_lead", "window_rank", "window_running",
-        "winsorize_prices", "wordcount",
-    }
-)
-
-
-# The rest of the registry as of the same freeze: registered then but
-# never externally green.  Together with _EXTERNALLY_VERIFIED this is
-# the frozen 134-query registry; names in neither set are post-freeze
-# additions.
-_PENDING_AT_FREEZE = frozenset(
-    {
-        "agg_arrays", "approx_distinct", "array_funcs", "cdc_latest_per_key",
-        "cond_null_funcs", "contamination_check", "dataset_split",
-        "dedup_cc_clusters", "doc_chunking", "doc_quality_filter",
-        "embedding_neardup", "embedding_quantize_int8", "event_transitions",
-        "from_json_struct", "fuzzy_part_names", "hll_mergeable_rollup",
-        "join_anti", "join_asof", "join_full_outer", "join_left_outer",
-        "join_range_band", "join_right_outer", "join_skew_salted",
-        "kmeans_clusters", "map_json_funcs", "merge_upsert", "orderby_limit",
-        "q22_global_sales", "regex_funcs", "sample_stratified_topn",
-        "simhash_neardup", "stream_dedup_first", "stream_join_attribution",
-        "stream_static_enrich", "stream_stateful_totals", "text_bigrams",
-        "text_fingerprint", "text_tfidf_top3", "topk_per_group",
-        "ts_moving_average", "ts_ohlc_bars", "ts_similarity_topk",
-        "weighted_sample", "window_distribution", "window_ntile",
-        "window_range_frame",
-    }
-)
-
-_KNOWN_AT_FREEZE = _EXTERNALLY_VERIFIED | _PENDING_AT_FREEZE
-
-# Green rows from the round-4 external window (CORRECTNESS_r04.json).
-# Folding them into the verified set pushes the 43 queries that have
-# never had an external green row (round-4 additions plus the two
-# rows-only sketches and the quantize fix) to the front of the
-# round-5 prefix window — the rotation VERDICT r4 item #3 asks for.
-_R4_VERIFIED = frozenset(
-    {
-        "agg_arrays", "array_funcs", "cdc_latest_per_key",
-        "cond_null_funcs", "contamination_check", "dataset_split",
-        "dedup_cc_clusters", "dedup_minhash_ctrl", "doc_chunking",
-        "doc_quality_filter", "embedding_neardup", "event_transitions",
-        "from_json_struct", "fuzzy_part_names", "join_anti", "join_asof",
-        "join_bloom_prune", "join_full_outer", "join_left_outer",
-        "join_range_band", "join_right_outer", "join_skew_salted",
-        "kmeans_clusters", "kv_format_scan", "map_json_funcs",
-        "merge_upsert", "orderby_limit", "q22_global_sales",
-        "regex_funcs", "sample_stratified_topn", "scd2_user_state",
-        "simhash_neardup", "stream_dedup_first",
-        "stream_join_attribution", "stream_stateful_totals",
-        "stream_static_enrich", "text_bigrams", "text_fingerprint",
-        "text_tfidf_top3", "topk_per_group", "ts_moving_average",
-        "ts_ohlc_bars", "ts_similarity_topk", "weighted_sample",
-        "window_distribution", "window_ntile", "window_range_frame",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R4_VERIFIED
-
-# Names added to the registry during round 5 (after the r4 window was
-# drawn).  Their tier is BELOW the r4-era unverified queries: the r5
-# window must first finish union coverage of the 178-query r4
-# registry (43 never-green names, all of which fit a 50-query
-# window); these newcomers take the remaining slots and roll into
-# the r6 window otherwise.
-_ADDED_R5 = frozenset(
-    {
-        "ann_pq_topk", "corpus_zipf_slope", "dedup_substring_spans",
-        "event_path_topk", "join_interval_overlap",
-        "mm_audio_wav_decode", "mm_image_ppm_decode",
-        "orc_partitioned_scan", "text_readability",
-        "ts_seasonal_decompose", "join_asof_nearest", "stream_dedup_sig_index",
-        "window_first_last", "embedding_pca_project", "attribution_models", "agg_skew_twophase", "dataset_kfold", "udf_arrow_map", "langid_confusion_matrix", "dedup_canonical_exact", "curation_pipeline_ctrl",
-        "snapshot_state_diff", "ri_orphan_audit",
-        "dataset_split_stratified", "corr_matrix",
-        "drift_psi", "stats_mergeable_moments", "dataset_card_stats",
-        "cooccurrence_pmi", "minhash_calibration", "ks_drift",
-        "gaps_islands_streaks", "dataset_alpha_mix",
-        "hard_negative_mining", "label_noise_knn", "embedding_standardize", "ts_changepoint_cusum", "stream_drift_monitor", "mm_scene_cuts", "k_anonymity_audit", "score_pr_curve", "cluster_purity_eval", "ts_autocorrelation", "quantile_normalize_sources", "lsh_s_curve", "user_feature_matrix", "search_query_expansion", "attribution_markov_removal", "stream_cusum_monitor", "score_reliability_diagram", "dedup_minhash_shingles", "dq_freshness_lag", "cep_view_to_purchase", "cep_latency_percentiles", "embedding_norm_audit", "corpus_heaps_law", "cross_source_dup_matrix", "ann_index_balance", "packing_efficiency", "join_null_safe", "gdpr_erasure_audit", "embedding_distance_histogram", "conversion_wilson_ci", "growth_accounting", "doc_ngram_novelty", "source_lang_entropy", "curation_funnel_report", "tokenizer_fertility", "pareto_user_share", "ts_hourly_profile", "join_time_bucket_overlap", "dedup_modality_agreement",
-    }
-)
-
-# Green rows from the round-5 external window (CORRECTNESS_r05.json:
-# 47 oracle-green + 3 rows-only-by-design, ZERO red).  Folding them
-# into the verified set empties tier 1 (every r4-era query now has an
-# external green row) and promotes the 65 never-checked r5 additions
-# (_ADDED_R5 minus the ones the r5 window already covered) to the
-# front of the round-6 prefix window — 50 of 65 drain in r6, the
-# rest lead r7.
-_R5_VERIFIED = frozenset(
-    {
-        "ann_banded_topk", "ann_ivf_kmeans", "ann_recall_report",
-        "approx_distinct", "basket_lift_pairs", "bpe_merges",
-        "curation_pipeline", "dataset_mix", "dedup_containment",
-        "dedup_incremental", "dedup_keep_best", "dedup_substring_spans",
-        "doc_model_score", "doc_repetition_filter", "dq_expectations",
-        "drift_psi", "embedding_centroid_by_lang",
-        "embedding_quantize_int8", "embedding_random_projection",
-        "event_path_topk", "freq_heavy_hitters", "hll_mergeable_rollup",
-        "join_interval_overlap", "join_point_in_time", "linreg_by_group",
-        "mm_audio_segments", "mm_audio_wav_decode", "orc_partitioned_scan",
-        "pagerank_transitions", "profile_columns", "reachability_bfs",
-        "redact_pii", "rfm_segments", "ri_orphan_audit",
-        "search_hybrid_rrf", "semdedup_pairs", "seq_packing",
-        "stream_docs_quality_gate", "stream_join_outer", "text_bm25_topk",
-        "text_entropy", "text_lm_bigram_nll", "text_remove_boilerplate",
-        "text_token_ids", "ts_anomaly_zscore", "ts_interpolate_linear",
-        "udtf_tokenize", "variant_json_extract", "vocab_oov_rate",
-        "window_distinct_running",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R5_VERIFIED
-
-# Green rows from the round-6 external window (CORRECTNESS_r06.json:
-# 49 oracle-green + 1 rows-only-by-design `embedding_pca_project`,
-# ZERO red).  Folding them in leaves exactly the 15-query tail of
-# ``_ADDED_R5`` unverified; the tiering fronts those 15 in round 7's
-# window, completing union driver coverage of the frozen 250-query
-# registry.
-_R6_VERIFIED = frozenset(
-    {
-        "agg_skew_twophase", "ann_pq_topk", "attribution_markov_removal",
-        "attribution_models", "cep_latency_percentiles",
-        "cep_view_to_purchase", "cluster_purity_eval", "cooccurrence_pmi",
-        "corpus_zipf_slope", "corr_matrix", "cross_source_dup_matrix",
-        "curation_funnel_report", "curation_pipeline_ctrl",
-        "dataset_card_stats", "dataset_kfold", "dataset_split_stratified",
-        "dedup_canonical_exact", "dedup_minhash_shingles",
-        "dq_freshness_lag", "embedding_norm_audit", "embedding_pca_project",
-        "embedding_standardize", "gaps_islands_streaks",
-        "hard_negative_mining", "join_asof_nearest", "join_null_safe",
-        "join_time_bucket_overlap", "k_anonymity_audit", "ks_drift",
-        "label_noise_knn", "langid_confusion_matrix", "lsh_s_curve",
-        "minhash_calibration", "mm_image_ppm_decode", "mm_scene_cuts",
-        "quantile_normalize_sources", "search_query_expansion",
-        "snapshot_state_diff", "stats_mergeable_moments",
-        "stream_cusum_monitor", "stream_dedup_sig_index",
-        "stream_drift_monitor", "text_readability", "ts_autocorrelation",
-        "ts_changepoint_cusum", "ts_hourly_profile",
-        "ts_seasonal_decompose", "udf_arrow_map", "user_feature_matrix",
-        "window_first_last",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R6_VERIFIED
-
-# CORRECTNESS_r07.json: the driver's round-7 window — all 50 green
-# (rows+schema+hash).  That window drained the verification backlog:
-# with this fold, every oracle-bearing query in the registry has an
-# external green row, so the round-8 window fronts only round-8
-# additions.
-_R7_VERIFIED = frozenset(
-    {
-        "ann_index_balance", "ann_index_upsert", "ann_mutual_knn_graph",
-        "approx_percentile_audit", "conversion_wilson_ci",
-        "corpus_heaps_law", "dataset_alpha_mix", "dedup_exact",
-        "dedup_modality_agreement", "dedup_phash_hamming",
-        "doc_ngram_novelty", "drift_psi",
-        "embedding_distance_histogram", "embedding_matryoshka_truncate",
-        "embedding_outlier_score", "freq_count_min_estimate",
-        "gdpr_erasure_audit", "graph_triangle_count",
-        "grouped_mode_stat", "growth_accounting", "hist2d_price_qty",
-        "interval_max_concurrency", "join_broadcast",
-        "join_bucketed_colocated", "join_lateral_topk",
-        "lsh_neardup_prod", "mm_image_channel_stats",
-        "mm_image_phash_dedup", "mm_image_resize", "packing_efficiency",
-        "pareto_user_share", "prep_pipeline", "q3_shipping_priority",
-        "score_brier_decomposition", "score_pr_curve",
-        "score_reliability_diagram", "score_roc_auc",
-        "search_ndcg_eval", "semdedup_threshold_sweep",
-        "sessionize_events", "shard_manifest_balance",
-        "source_js_divergence", "source_lang_entropy",
-        "stream_cms_monitor", "text_code_detect", "tokenizer_fertility",
-        "truncation_loss_report", "ts_downsample_lttb",
-        "udf_pandas_iter", "win_session_dynamic_gap",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R7_VERIFIED
-
-# CORRECTNESS_r08.json: the driver's round-8 window — all 50 green,
-# including every round-8 addition.  With this fold the external
-# backlog is zero (295-name union across r1-r8).
-_R8_VERIFIED = frozenset(
-    {
-        "ann_lsh_topk", "ann_prefilter_vs_postfilter", "ann_topk_cosine",
-        "crossmodal_dedup_pipeline", "dataset_epoch_plan",
-        "dataset_token_budget", "date_funcs", "dedup_exact",
-        "dedup_incremental_ctrl", "dedup_ngram_jaccard",
-        "dedup_paragraph_exact", "dq_expectations", "drift_psi",
-        "eval_set_builder", "event_sequence_pack",
-        "filter_attribution_report", "filter_like", "join_broadcast",
-        "join_sortmerge", "lsh_neardup_adaptive", "mj_wordcount",
-        "mm_binary_meta", "mm_frame_sample", "pipe_tokens", "proj_filter",
-        "q2_min_cost_supplier", "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "retention_cohorts",
-        "retrieval_hard_negatives", "ri_orphan_audit", "semdedup_keep_best",
-        "sessionize_events", "split_leakage_simhash",
-        "stats_mergeable_moments", "stream_decontaminate",
-        "stream_token_budget", "string_funcs", "text_bm25_topk",
-        "text_langid", "text_lm_bigram_nll", "text_quality",
-        "ts_gapfill_locf", "ts_rollup_daily_from_hourly", "udf_pandas_scalar",
-        "win_sliding", "win_tumbling", "window_rank", "wordcount",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R8_VERIFIED
-
-# Green rows from the round-9 external window (CORRECTNESS_r09.json:
-# all 50 sampled rows green, including all 8 round-9 additions and
-# the fronted label_noise_knn).
-_R9_VERIFIED = frozenset(
-    {
-        "ann_lsh_topk", "ann_topk_cosine", "crossmodal_dedup_ctrl",
-        "curation_pipeline_ctrl", "dataset_epoch_plan",
-        "dataset_split_stratified", "date_funcs",
-        "dedup_crosslingual_entities", "dedup_exact",
-        "dedup_incremental_capped", "dedup_incremental_ctrl",
-        "dedup_minhash_ctrl", "dedup_ngram_jaccard",
-        "domain_quota_curation", "dq_expectations", "drift_psi",
-        "eval_set_builder", "filter_like", "intradoc_dedup_lines",
-        "join_broadcast", "join_sortmerge", "label_noise_knn",
-        "mj_wordcount", "mm_binary_meta", "mm_frame_sample",
-        "pipe_tokens", "proj_filter", "q2_min_cost_supplier",
-        "q3_shipping_priority", "q4_order_priority",
-        "q5_local_supplier_volume", "retention_cohorts",
-        "ri_orphan_audit", "sessionize_events",
-        "split_leakage_simhash_ctrl", "stats_mergeable_moments",
-        "stream_domain_quota", "stream_token_budget", "string_funcs",
-        "text_bm25_topk", "text_langid", "text_lm_bigram_nll",
-        "text_quality", "ts_gapfill_locf",
-        "ts_rollup_daily_from_hourly", "udf_pandas_scalar",
-        "win_sliding", "win_tumbling", "window_rank", "wordcount",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R9_VERIFIED
-
-# Queries whose BEHAVIOR (not just docstring) changed AFTER their
-# newest external green row — demoted to the unverified tiers so the
-# next driver window re-verifies them (r8 verdict item #2: external
-# verification must postdate the last behavior change).
-#   - sample_stratified_topn: rewired onto _lang_bucket_rank in the
-#     FINAL r9 commit (8d8b90b), after the r9 window ran — the one
-#     hygiene item the r9 verdict fronts for r10.
-#   - round-10 changes: stream_domain_quota's global prior now sums
-#     LEVEL-1-SURVIVOR tokens (the r9 ADVICE high item — a real
-#     behavior fix); the simhash consumers moved to the shuffle-free
-#     mapInPandas fingerprint (twin-tested bit-identical, re-verify
-#     anyway); dedup_incremental_capped's verify re-keyed on token-set
-#     content; dedup_crosslingual_entities' hot-posting valve now
-#     counts occupancy on the raw entity (pre-hash, the oracle's
-#     rule).
-#   - round-10-B: the MinHash band build moved to the shuffle-free
-#     per-row array-expression form (minhash_band_signatures_docs,
-#     twin-tested bit-identical to the explode→groupBy build) — every
-#     minhash consumer re-fronts for an external green row anyway.
-_CHANGED_SINCE_VERIFIED = frozenset(
-    {
-        "sample_stratified_topn",
-        "stream_domain_quota",
-        "dedup_simhash",
-        "simhash_neardup",
-        "dedup_keep_best",
-        "split_leakage_simhash",
-        "split_leakage_simhash_ctrl",
-        "crossmodal_dedup_ctrl",
-        "dedup_incremental_capped",
-        "dedup_crosslingual_entities",
-        "dedup_minhash_lsh",
-        "dedup_minhash_ctrl",
-        "dedup_incremental",
-        "dedup_incremental_ctrl",
-        "curation_pipeline",
-        "curation_pipeline_ctrl",
-        "lsh_s_curve",
-        "dedup_modality_agreement",
-        "stream_dedup_sig_index",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED - _CHANGED_SINCE_VERIFIED
-
-# Green rows from the round-10 external window (CORRECTNESS_r10.json:
-# all 50 sampled rows green — the 12 round-10 additions plus all 19
-# names demoted by the round-10 _CHANGED_SINCE_VERIFIED set above).
-_R10_VERIFIED = frozenset(
-    {
-        "ann_topk_cosine", "aug_word_dropout", "contamination_fuzzy",
-        "crossmodal_dedup_ctrl", "curation_pipeline",
-        "curation_pipeline_ctrl", "dataset_curriculum_phases",
-        "dataset_dsir_select", "dataset_group_kfold",
-        "dataset_group_kfold_ctrl", "dedup_crosslingual_entities",
-        "dedup_exact", "dedup_incremental", "dedup_incremental_capped",
-        "dedup_incremental_ctrl", "dedup_keep_best",
-        "dedup_minhash_ctrl", "dedup_minhash_lsh",
-        "dedup_modality_agreement", "dedup_simhash",
-        "dedup_substring_chains", "domain_blocklist_filter",
-        "dq_expectations", "drift_psi", "join_broadcast", "lsh_s_curve",
-        "mj_wordcount", "mm_audio_fingerprint", "mm_binary_meta",
-        "mm_transcript_align", "pii_checksum_mask", "proj_filter",
-        "q2_min_cost_supplier", "q3_shipping_priority",
-        "sample_stratified_topn", "sessionize_events",
-        "simhash_neardup", "split_leakage_simhash",
-        "split_leakage_simhash_ctrl", "stream_dedup_sig_index",
-        "stream_domain_quota", "string_funcs", "text_bm25_topk",
-        "text_langid", "text_strip_markup",
-        "ts_rollup_daily_from_hourly", "udf_pandas_scalar",
-        "win_tumbling", "window_rank", "wordcount",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R10_VERIFIED
-
-# Round-11 demotions (same rule: external verification must postdate
-# the last behavior change).
-#   - curation_funnel_report: switched to the shuffle-free
-#     minhash_band_signatures_docs build in round 10-B (dedup_q.py)
-#     but was missed by the round-10 demotion set — the r10 verdict's
-#     #1 item.  Twin-tested bit-identical, re-verify externally anyway.
-#   - round-11 changes to minhash_band_signatures_docs (null-text
-#     guard + tokens-projected-once build, both twin-tested
-#     bit-identical): every direct consumer re-fronts anyway, the
-#     round-10 practice.
-#   - dedup_substring_chains: the frequency stage moved from
-#     distinct→count to the single min!=max groupBy and the shuffle
-#     key to binary md5 (round-11 disk work) — same declared
-#     semantics, oracle re-checked green, re-verify externally anyway.
-_CHANGED_SINCE_VERIFIED_R11 = frozenset(
-    {
-        "curation_funnel_report",
-        "dedup_substring_chains",
-        "dedup_minhash_lsh",
-        "dedup_minhash_ctrl",
-        "dedup_incremental",
-        "dedup_incremental_capped",
-        "dedup_incremental_ctrl",
-        "curation_pipeline",
-        "curation_pipeline_ctrl",
-        "lsh_s_curve",
-        "dedup_modality_agreement",
-        "dataset_group_kfold",
-        "dataset_group_kfold_ctrl",
-        "contamination_fuzzy",
-        "stream_dedup_sig_index",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED - _CHANGED_SINCE_VERIFIED_R11
-
-# Names with a hash-green row in the driver's round-11 window
-# (CORRECTNESS_r11.json: 50/50 green) — includes all 15 round-11
-# demotions and all 7 round-11 additions, so the R11 demotion set is
-# fully re-verified.
-_R11_VERIFIED = frozenset(
-    {
-        "ann_topk_cosine", "aug_span_corruption", "contamination_fuzzy",
-        "curation_funnel_report", "curation_pipeline",
-        "curation_pipeline_ctrl", "dataset_group_kfold",
-        "dataset_group_kfold_ctrl", "dataset_mix_temperature",
-        "dedup_exact", "dedup_incremental", "dedup_incremental_capped",
-        "dedup_incremental_capped_sliced", "dedup_incremental_ctrl",
-        "dedup_minhash_ctrl", "dedup_minhash_lsh",
-        "dedup_modality_agreement", "dedup_ngram_jaccard",
-        "dedup_substring_chains", "dedup_substring_chains_sliced",
-        "dq_expectations", "drift_psi", "filter_like", "join_broadcast",
-        "join_sortmerge", "lsh_s_curve", "mj_wordcount", "mm_binary_meta",
-        "mm_frame_sample", "mm_interleaved_pack", "pipe_tokens",
-        "proj_filter", "q2_min_cost_supplier", "q3_shipping_priority",
-        "q5_local_supplier_volume", "retention_cohorts", "ri_orphan_audit",
-        "sessionize_events", "stats_mergeable_moments",
-        "stream_dedup_sig_index", "stream_phash_sig_index", "string_funcs",
-        "text_bm25_topk", "text_langid", "ts_rollup_daily_from_hourly",
-        "udf_pandas_scalar", "win_tumbling", "window_ntile_bucketed",
-        "window_rank", "wordcount",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R11_VERIFIED
-
-# Round-12 demotions: every registered name whose code path changed in
-# the post-r11-window commit bb816e5 (the capped-LSH sliced rebuild):
-#   - dedup_incremental_capped_sliced: rebuilt two-phase (band-sig
-#     candidate slices + pmod(id_b, K) verify slices).
-#   - dedup_incremental_capped: one-shot verify now routes through the
-#     split-out token_set_keyed/jaccard_verify_keyed (twin-tested
-#     bit-identical, re-verify externally anyway).
-#   - dedup_substring_chains_sliced: staging root now keyed by
-#     sf_dir+K+pid and rmtree'd up front.
-#   - stream_dedup_sig_index / stream_phash_sig_index /
-#     stream_token_budget / stream_domain_quota: standing-index
-#     existence probe moved from driver-local os.path to Hadoop
-#     FileSystem.
-_CHANGED_SINCE_VERIFIED_R12 = frozenset(
-    {
-        # round-12 in-round change: _distinct_8grams factored out of
-        # contamination_check so contamination_incr shares it
-        # (expression identical; re-verify externally anyway).
-        "contamination_check",
-        # round-12 in-round change: the bucketed exact-rank machinery
-        # factored into _exact_global_ranks so the orders fact-table
-        # form shares it (plan identical; re-verify externally anyway).
-        "window_ntile_bucketed",
-        "dedup_incremental_capped",
-        "dedup_incremental_capped_sliced",
-        "dedup_substring_chains_sliced",
-        "stream_dedup_sig_index",
-        "stream_phash_sig_index",
-        "stream_token_budget",
-        "stream_domain_quota",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED - _CHANGED_SINCE_VERIFIED_R12
-
-# Round-13 demotions: names whose implementation OR shared oracle
-# changed after the r12 driver window closed, so their last green row
-# predates the code that now runs.  (stream_contam_index is NEW this
-# round and needs no demotion — never-verified names are always in
-# the driver's window.)
-_CHANGED_SINCE_VERIFIED_R13 = frozenset(
-    {
-        # 16-byte BINARY shingle keys (commit 1cf1d4d): the shared
-        # _distinct_8grams helper now emits unhex(md5(..)) — key is
-        # internal, oracles unchanged, re-verify externally anyway.
-        "contamination_check",
-        # + batch-restricted merge-on-read, multi-cut geometry, and
-        # optional transient-grams cleanup (commits ea8312e, 89b0b74).
-        "contamination_incr",
-        # the shared _SUBSTR_SPAN_ORACLE now derives its shingle-
-        # position range from the corpus' max token count instead of
-        # a fixed j<=999 cap (r12 ADVICE #1, commit a4ebb38) — an
-        # ORACLE change, so every query that pins against it must
-        # re-green.
-        "dedup_substring_chains",
-        "dedup_substring_chains_sliced",
-        # + day-0 hash-space slicing knob, batch-restricted readout
-        # semi-join, phase stamps, env-tunable cuts.
-        "dedup_substring_chains_incr",
-        # arrival geometry parametrized (n-batch replay, per-geometry
-        # oracle re-derivation, commit b9fef4c) + the same oracle
-        # j-range fix in its as-of SQL.
-        "stream_substr_freq_index",
-        # output schema changed: exact distinct counts + within_rel_err
-        # verdict columns replace the rows-only sketch readout
-        # (commit 8ff211c) — both now carry REAL DuckDB oracles.
-        "approx_distinct",
-        "hll_mergeable_rollup",
-        # shares _slice_count/_staging_root, whose signatures grew the
-        # day-0 default + phase-stamp plumbing — behavior-identical by
-        # test, re-verify externally anyway (the r12 discipline).
-        "dedup_incremental_capped_sliced",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED - _CHANGED_SINCE_VERIFIED_R13
-
-# Round-13 OPTIMIZATION demotions (same rule): every query whose
-# executed plan changed in the r13 optimization passes — map-side
-# token sets, sets-derived band signatures, shared-subtree
-# localCheckpoints, the single-pass BM25 rebuild, the vectorized
-# k-means assignment, the norm-riding fixed-cell assigner, the
-# dot_seq single-hop barrier, and the thread-pooled independent
-# batch jobs (ann_index_upsert day writes and both standing-index
-# incr forms' arrival batches — lazy readout plans identical, but
-# the eager job submission changed).  All are behavior-identical
-# (oracles unchanged, each re-greened locally at sf0.01 AND sf0.001
-# this round), but external verification must postdate the last
-# executed-plan change — the r12 discipline applied to plan-only
-# edits too.
-_CHANGED_SINCE_VERIFIED_R13_OPT = frozenset(
-    {
-        "ann_index_balance", "ann_index_upsert", "ann_ivf_kmeans",
-        "ann_mutual_knn_graph", "cluster_purity_eval",
-        "contamination_fuzzy", "contamination_incr",
-        "crossmodal_dedup_ctrl",
-        "crossmodal_dedup_pipeline", "curation_funnel_report",
-        "curation_pipeline", "curation_pipeline_ctrl",
-        "dataset_group_kfold", "dataset_group_kfold_ctrl",
-        "dedup_cc_clusters", "dedup_crosslingual_entities",
-        "dedup_incremental", "dedup_incremental_capped",
-        "dedup_incremental_ctrl", "dedup_keep_best",
-        "dedup_minhash_ctrl", "dedup_minhash_lsh",
-        "dedup_minhash_shingles", "dedup_modality_agreement",
-        "dedup_phash_hamming", "dedup_substring_chains_incr",
-        "domain_quota_curation",
-        "embedding_neardup", "eval_set_builder", "kmeans_clusters",
-        "lsh_neardup_adaptive", "lsh_neardup_prod", "lsh_s_curve",
-        "minhash_calibration", "mm_audio_fingerprint",
-        "prep_pipeline", "search_hybrid_rrf", "simhash_neardup",
-        "split_leakage_simhash", "split_leakage_simhash_ctrl",
-        "stream_dedup_sig_index", "text_bm25_topk",
-        "text_lm_bigram_nll",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED - _CHANGED_SINCE_VERIFIED_R13_OPT
-
-# Names with a hash-green row in the driver's round-13 window
-# (CORRECTNESS_r13.json: 50/50 green).  Six r13-demoted names did NOT
-# fit that window (contamination_fuzzy, dataset_group_kfold(+_ctrl),
-# dedup_incremental_capped_sliced, dedup_substring_chains_incr,
-# dedup_substring_chains_sliced) — by not appearing here they stay
-# unverified and front-of-registry, so the r14 window re-covers them.
-_R13_VERIFIED = frozenset(
-    {
-        "ann_index_balance", "ann_index_upsert", "ann_ivf_kmeans",
-        "ann_mutual_knn_graph", "approx_distinct", "cluster_purity_eval",
-        "contamination_check", "contamination_incr",
-        "crossmodal_dedup_ctrl", "crossmodal_dedup_pipeline",
-        "curation_funnel_report", "curation_pipeline",
-        "curation_pipeline_ctrl", "dedup_cc_clusters",
-        "dedup_crosslingual_entities", "dedup_incremental",
-        "dedup_incremental_capped", "dedup_incremental_ctrl",
-        "dedup_keep_best", "dedup_minhash_ctrl", "dedup_minhash_lsh",
-        "dedup_minhash_shingles", "dedup_modality_agreement",
-        "dedup_phash_hamming", "dedup_substring_chains",
-        "domain_quota_curation", "embedding_neardup", "eval_set_builder",
-        "hll_mergeable_rollup", "kmeans_clusters", "lsh_neardup_adaptive",
-        "lsh_neardup_prod", "lsh_s_curve", "minhash_calibration",
-        "mm_audio_fingerprint", "prep_pipeline", "search_hybrid_rrf",
-        "simhash_neardup", "split_leakage_simhash",
-        "split_leakage_simhash_ctrl", "stream_contam_index",
-        "stream_dedup_sig_index", "stream_domain_quota",
-        "stream_phash_sig_index", "stream_substr_freq_index",
-        "stream_token_budget", "text_bm25_topk", "text_lm_bigram_nll",
-        "window_ntile_bucketed", "window_ntile_bucketed_orders",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED | _R13_VERIFIED
-
-# Round-14 OPTIMIZATION demotions (the r12/r13 discipline): every
-# query whose EXECUTED PLAN changed in the r14 optimization passes —
-# behavior-identical by oracle re-check at sf0.01 (+sf0.001 for the
-# restructured ones) and twin tests, but external verification must
-# postdate the last executed-plan change.
-_CHANGED_SINCE_VERIFIED_R14_OPT = frozenset(
-    {
-        # dup-position pass rebuilt as a single h-partitioned window
-        # (one exchange + one scan, was two of each); twin-tested
-        # bit-identical dup set.
-        "dedup_substring_chains",
-        # kept-roster checkpoint dropped (lazy anti-join, grams cache
-        # retained) — the r13 driver-flagged regression's fix.
-        "prep_pipeline",
-        # corpus-scale set/gram materializations routed through
-        # operators.dedup.materialize (SPARK_GRAFT_SETS_STAGING
-        # parquet valve).  Default executed plan byte-identical
-        # (materialize defaults to the same localCheckpoint) and the
-        # valve mode is twin-tested + oracle-green, but the r12
-        # discipline re-fronts shared-helper signature changes
-        # anyway.
-        "dedup_minhash_lsh", "dedup_minhash_ctrl", "dedup_incremental",
-        "dedup_incremental_capped", "lsh_s_curve",
-        "dedup_modality_agreement", "dedup_incremental_ctrl",
-        "dataset_group_kfold", "dataset_group_kfold_ctrl",
-        "contamination_fuzzy", "eval_set_builder",
-        # label rides _assign_adaptive_cells' join-back (carry=):
-        # one fewer corpus-scale vec_id join each.
-        "hard_negative_mining", "label_noise_knn",
-        # two-level distributive decimal aggregate (compact Long-backed
-        # sums per (rf,ls,disc,tax), exact products over ~600 rows);
-        # row-equal vs the single-level form at 4 SFs.
-        "q1_pricing",
-    }
-)
-
-_EXTERNALLY_VERIFIED = _EXTERNALLY_VERIFIED - _CHANGED_SINCE_VERIFIED_R14_OPT
-
-_KNOWN_AT_FREEZE = _KNOWN_AT_FREEZE | (
-    frozenset(_R4_VERIFIED)
-    | frozenset(
-        {
-            # r4 additions never sampled by an external window (the
-            # rest of the 178-query r4 registry).
-            "mm_audio_segments", "dq_expectations", "profile_columns",
-            "text_bm25_topk", "variant_json_extract", "ann_banded_topk",
-            "stream_join_outer", "freq_heavy_hitters",
-            "ts_anomaly_zscore", "udtf_tokenize",
-            "window_distinct_running", "join_point_in_time",
-            "dedup_keep_best", "linreg_by_group", "text_lm_bigram_nll",
-            "ann_ivf_kmeans", "stream_docs_quality_gate", "dataset_mix",
-            "ts_interpolate_linear", "pagerank_transitions",
-            "dedup_incremental", "text_token_ids",
-            "embedding_random_projection", "seq_packing",
-            "reachability_bfs", "curation_pipeline", "search_hybrid_rrf",
-            "semdedup_pairs", "doc_repetition_filter", "rfm_segments",
-            "dedup_containment", "text_entropy",
-            "embedding_centroid_by_lang", "text_remove_boilerplate",
-            "basket_lift_pairs", "bpe_merges", "ann_recall_report",
-            "vocab_oov_rate", "doc_model_score", "redact_pii",
-            "kv_format_scan", "scd2_user_state", "dedup_minhash_ctrl",
-            "join_bloom_prune",
-        }
-    )
-)
-
-
 def load_all() -> dict[str, Query]:
-    """Import every query module (idempotent) and return the registry.
-
-    The returned dict is ordered **round-robin across query families**
-    (one query per source module, then the next from each, ...) rather
-    than module-by-module, with queries not yet externally verified
-    ordered before ones that are.  Rationale: any consumer that
-    samples a prefix of the registry — e.g. a correctness harness
-    capped at N queries — then spans joins, windows, streaming, dedup,
-    similarity, text, multimodal, time-series, and behavioral families
-    instead of seeing only whichever module happened to import first,
-    and rotates fresh queries into each successive window.
-    """
+    """Import every query module (idempotent) and return the registry
+    in verification order: a consumer that checks only a prefix, like
+    the external harness's 50-query oracle window, checks first the
+    queries verified least recently, or not since their plan last
+    changed (:func:`verification_order`)."""
     for mod in _MODULES:
         try:
             importlib.import_module(mod)
@@ -731,27 +92,67 @@ def load_all() -> dict[str, Query]:
             # a missing third-party dep inside one should surface.
             if mod.rsplit(".", 1)[-1] not in str(exc):
                 raise
-    # three tiers: (1) queries that existed when the verified list was
-    # frozen but have never had an external green row — these MUST fit
-    # inside a 50-query prefix window to complete union coverage of
-    # the frozen registry; (2) queries added after the freeze (also
-    # unverified, but not blocking the union goal); (3) verified.
-    tier1 = {
-        n: q
-        for n, q in REGISTRY.items()
-        if n not in _EXTERNALLY_VERIFIED and n in _KNOWN_AT_FREEZE
-    }
-    tier2 = {
-        n: q
-        for n, q in REGISTRY.items()
-        if n not in _EXTERNALLY_VERIFIED and n not in _KNOWN_AT_FREEZE
-    }
-    tier3 = {n: q for n, q in REGISTRY.items() if n in _EXTERNALLY_VERIFIED}
-    return {
-        **_interleaved(tier1),
-        **_interleaved(tier2),
-        **_interleaved(tier3),
-    }
+    return verification_order(REGISTRY)
+
+
+ROOT = Path(__file__).resolve().parents[2]
+FINGERPRINTS = Path(__file__).with_name("fingerprints.json")
+
+
+def verification_order(
+    registry: dict[str, Query],
+    root: Path = ROOT,
+    fingerprints: Path = FINGERPRINTS,
+) -> dict[str, Query]:
+    """Queries with no green row since their ``since`` first, then the
+    rest by ascending last green round; ties keep the round-robin of
+    :func:`_interleaved`, so any prefix spans the query families.
+
+    The harness leaves one ``CORRECTNESS_r<N>.json`` of per-query rows
+    under ``root`` per round, so each round rotates the order by
+    itself.  ``since`` (``fingerprints``: ``{name: [fp, since]}``,
+    written by ``tools/explain.py --fingerprints``) is the newest round
+    on disk when the query's plan last changed: rows checked against
+    an older plan do not count."""
+    fps = json.loads(fingerprints.read_text()) if fingerprints.exists() else {}
+    since = {n: s for n, (_, s) in fps.items()}
+    last = last_green_rounds(correctness_rounds(root), since)
+    ordered = sorted(
+        _interleaved(registry).values(), key=lambda q: last.get(q.name, 0)
+    )
+    return {q.name: q for q in ordered}
+
+
+def correctness_rounds(root: Path = ROOT) -> dict[int, dict[str, dict]]:
+    """``{N: rows}`` for every ``CORRECTNESS_r<N>.json`` under ``root``."""
+    rounds = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            rounds[int(m.group(1))] = json.loads(path.read_text())
+    return rounds
+
+
+def is_green(row: dict) -> bool:
+    """A harness row passed: rows, schema and value hash all match, or
+    the query has no oracle and only its row count was recorded."""
+    if row.get("err") == "no_oracle":
+        return True
+    keys = ("rows_match", "schema_match", "hash_match")
+    return row.get("err") is None and all(row.get(k) is True for k in keys)
+
+
+def last_green_rounds(
+    rounds: dict[int, dict[str, dict]], since: dict[str, int]
+) -> dict[str, int]:
+    """Newest round N > ``since[name]`` (default 0) with a green row,
+    per name that has one."""
+    last: dict[str, int] = {}
+    for n, rows in sorted(rounds.items()):
+        for name, row in rows.items():
+            if n > since.get(name, 0) and is_green(row):
+                last[name] = n
+    return last
 
 
 def _interleaved(registry: dict[str, Query]) -> dict[str, Query]:
@@ -761,15 +162,8 @@ def _interleaved(registry: dict[str, Query]) -> dict[str, Query]:
     for q in registry.values():
         by_module.setdefault(q.fn.__module__, []).append(q)
     lanes = [by_module[m] for m in sorted(by_module)]
-    out: dict[str, Query] = {}
-    depth = 0
-    while len(out) < len(registry):
-        for lane in lanes:
-            if depth < len(lane):
-                q = lane[depth]
-                out[q.name] = q
-        depth += 1
-    return out
+    layers = itertools.zip_longest(*lanes)
+    return {q.name: q for layer in layers for q in layer if q is not None}
 
 
 def spark_queries() -> dict[str, QueryFn]:

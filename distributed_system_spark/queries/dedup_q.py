@@ -17,7 +17,6 @@ from distributed_system_spark.operators.dedup import (
     doc_tokens,
     jaccard_verify_keyed,
     jaccard_verify_sets,
-    materialize,
     minhash_band_signatures_sets,
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
@@ -243,7 +242,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize pass (r13): the checkpointed set table feeds both
     # the band build (min over distinct tokens ≡ min over tokens) and
     # the verify joins — the corpus is scanned and split exactly once.
-    sets_ = materialize(doc_token_sets(docs))
+    sets_ = doc_token_sets(docs).localCheckpoint()
     cand = lsh_candidate_pairs(minhash_band_signatures_sets(sets_))
     # materialize_scores: this query's output keeps the jaccard
     # column, the double-evaluation case (operator docstring).
@@ -416,7 +415,7 @@ def dedup_minhash_ctrl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize pass over the generated corpus (r13): the ctrl
     # text-rewrite + split runs once into the checkpointed set table;
     # bands derive from it map-side.
-    sets_ = materialize(doc_token_sets(corpus))
+    sets_ = doc_token_sets(corpus).localCheckpoint()
     cand = lsh_candidate_pairs(minhash_band_signatures_sets(sets_))
     # materialize_scores: this query's output keeps the jaccard
     # column, the double-evaluation case (operator docstring).
@@ -553,7 +552,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # ONE tokenize pass (r13): bands derive from the checkpointed set
     # table the verify also joins.
-    sets_ = materialize(doc_token_sets(docs))
+    sets_ = doc_token_sets(docs).localCheckpoint()
     cand = lsh_candidate_pairs(minhash_band_signatures_sets(sets_)).filter(
         F.col("id_b") >= 400
     )
@@ -668,7 +667,7 @@ def dedup_incremental_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize pass (r13): the content-keyed fingerprint table
     # (id, ts, tsk, n) is checkpointed once and feeds the band build
     # (from its ts column) AND all three keyed-verify consumers.
-    keyed = materialize(token_set_keyed(doc_token_sets(docs)))
+    keyed = token_set_keyed(doc_token_sets(docs)).localCheckpoint()
     cand = lsh_candidate_pairs(
         minhash_band_signatures_sets(keyed), max_bucket=_BUCKET_CAP
     ).filter(F.col("id_b") >= 400)
@@ -1558,7 +1557,7 @@ def lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize pass over the 200-doc sample (r13): the map-side
     # set table (≡ the explode+groupBy form, twin-tested) feeds the
     # exhaustive truth pairs AND the band build.
-    sets_ = materialize(doc_token_sets(docs))
+    sets_ = doc_token_sets(docs).localCheckpoint()
     a = sets_.select(F.col("id").alias("id_a"), F.col("ts").alias("ts_a"))
     b = sets_.select(F.col("id").alias("id_b"), F.col("ts").alias("ts_b"))
     inter = F.size(F.array_intersect("ts_a", "ts_b"))
@@ -1997,7 +1996,7 @@ def dedup_modality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # ONE tokenize pass (r13): bands derive from the checkpointed set
     # table the verify also joins.
-    sets_ = materialize(doc_token_sets(docs))
+    sets_ = doc_token_sets(docs).localCheckpoint()
     cand = lsh_candidate_pairs(minhash_band_signatures_sets(sets_))
     textp = jaccard_verify_sets(cand, sets_, 0.8).select("id_a", "id_b")
 
@@ -2468,7 +2467,7 @@ def dedup_incremental_ctrl(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _ctrl_corpus(docs)
     # ONE tokenize pass over the generated corpus (r13): the ctrl
     # text-rewrite + split runs once into the checkpointed set table.
-    sets_ = materialize(doc_token_sets(corpus))
+    sets_ = doc_token_sets(corpus).localCheckpoint()
     cand = lsh_candidate_pairs(minhash_band_signatures_sets(sets_)).filter(
         F.col("id_b") >= _CTRL_CLONE_OFFSET
     )
@@ -3146,7 +3145,7 @@ def dataset_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # ONE tokenize pass (r13): bands derive from the checkpointed set
     # table the verify also joins.
-    sets_ = materialize(doc_token_sets(docs))
+    sets_ = doc_token_sets(docs).localCheckpoint()
     cand = lsh_candidate_pairs(minhash_band_signatures_sets(sets_))
     pairs = jaccard_verify_sets(cand, sets_, 0.8)
     edges = pairs.select(
@@ -3261,7 +3260,7 @@ def contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE tokenize pass (r13): the checkpointed set table feeds the
     # band build and both verify joins.
-    sets_ = materialize(doc_token_sets(nonval))
+    sets_ = doc_token_sets(nonval).localCheckpoint()
     # te and tr are two consumers of the band table — materialize it
     # once or the 8-md5-per-token band build runs twice (no
     # ReusedExchange across the branches; plans/r13).  The split
@@ -3374,7 +3373,7 @@ def dataset_group_kfold_ctrl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _ctrl_corpus(load_table(spark, sf_dir, "documents"))
     # ONE tokenize pass over the generated corpus (r13).
-    sets_ = materialize(doc_token_sets(corpus))
+    sets_ = doc_token_sets(corpus).localCheckpoint()
     cand = lsh_candidate_pairs(minhash_band_signatures_sets(sets_))
     pairs = jaccard_verify_sets(cand, sets_, 0.8)
     edges = pairs.select(

@@ -12,7 +12,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from distributed_system_spark.operators.dedup import materialize
 from distributed_system_spark.queries import register
 from distributed_system_spark.queries._util import (
     sequential_batches as _sequential_batches,
@@ -3011,13 +3010,10 @@ def prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     ).otherwise(F.array().cast("array<binary>"))
-    grams = materialize(
-        # corpus-scale table: honor the SPARK_GRAFT_SETS_STAGING
-        # parquet valve (default localCheckpoint, plan unchanged)
-        q.filter(F.col("split") != "val").select(
-            "doc_id", "split", F.explode(grams8).alias("h")
-        ),
-        "prep-grams",
+    grams = (
+        q.filter(F.col("split") != "val")
+        .select("doc_id", "split", F.explode(grams8).alias("h"))
+        .localCheckpoint()
     )
     train_g = grams.filter(F.col("split") == "train").select(
         F.col("doc_id").alias("train_doc"), "h"
@@ -4119,9 +4115,7 @@ def eval_set_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     slim, grams = eager_all(
         spark,
         slim_lazy.localCheckpoint,
-        # corpus-scale table: honor the SPARK_GRAFT_SETS_STAGING
-        # parquet valve (default localCheckpoint, plan unchanged)
-        lambda: materialize(grams_lazy, "esb-grams"),
+        grams_lazy.localCheckpoint,
     )
     train_g = grams.filter(F.col("split") == "train").select(
         F.col("doc_id").alias("train_doc"), "h"

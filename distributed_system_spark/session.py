@@ -31,6 +31,10 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Arrow for every pandas-UDF boundary.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Out-of-contract data (overflowing casts and arithmetic, bad
+    # dates) raises instead of turning into NULLs, whatever the
+    # caller's session had set.
+    "spark.sql.ansi.enabled": "true",
 }
 
 

@@ -1,44 +1,7 @@
-"""bench.py helper coverage: the truncated-record salvage path the
-r9 ADVICE item hardened — pure-python, no Spark session."""
+"""Bench-tooling helper coverage: tools/diskbound.py phase reports
+(pure Python) and bench.py's per-query checkpoint cleanup."""
 
 from __future__ import annotations
-
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from bench import _recover_times_from_tail  # noqa: E402
-
-
-def test_recovers_old_format_with_spaces():
-    tail = '..."queries": {"q1": 1.25, "wordcount": 0.5}, "sf": "sf0.1"}'
-    assert _recover_times_from_tail(tail) == {"q1": 1.25, "wordcount": 0.5}
-
-
-def test_recovers_compact_format_sf_before_queries():
-    # current output: compact separators AND "sf" emitted BEFORE
-    # "queries" — the old cut-at-"sf" heuristic returned {} here
-    tail = '{"metric":"headline","value":12.5,"unit":"sec","sf":"sf0.1","queries":{"q1":1.25,"dedup_simhash":2.75}}'
-    assert _recover_times_from_tail(tail) == {
-        "q1": 1.25,
-        "dedup_simhash": 2.75,
-    }
-
-
-def test_delta_and_retime_ratios_never_mistaken_for_seconds():
-    tail = (
-        '"queries":{"q1":1.25},"deltas":{"q1":9.9},'
-        '"retimes":{"q1":[7.0,3.0]},"regressions":[]}'
-    )
-    assert _recover_times_from_tail(tail) == {"q1": 1.25}
-
-
-def test_truncated_queries_key_falls_back_without_ratio_pollution():
-    # the "queries" key itself was cut away; only a later section
-    # survives — must not read delta ratios as seconds
-    tail = ':1.25},"deltas":{"q1":9.9},"regressions":[]}'
-    out = _recover_times_from_tail(tail)
-    assert out == {}
 
 
 def _load_diskbound():
@@ -102,8 +65,7 @@ def test_time_query_leaves_no_persistent_rdds(spark):
     localCheckpoints several queries build are never unpersisted by
     the query itself, and leftovers accumulating across a 60-query
     bench JVM compete with execution memory, polluting later
-    queries' timings.  (This one test does use the session fixture,
-    unlike the pure-python salvage tests above.)"""
+    queries' timings."""
     from bench import _time_query
     from distributed_system_spark.queries import load_all
 

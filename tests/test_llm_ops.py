@@ -1015,27 +1015,6 @@ def test_jaccard_verify_materialize_scores_twin(spark, sf_dir):
         assert got == want and want, t
 
 
-def test_materialize_parquet_valve_twin(spark, sf_dir, monkeypatch):
-    """operators.dedup.materialize: the SPARK_GRAFT_SETS_STAGING=
-    parquet valve (fault-tolerant staging for the corpus-scale set
-    tables, r13 VERDICT #3) must produce EXACTLY the default
-    localCheckpoint form's rows — staging is an execution choice,
-    never a semantic one.  Checked through a real consumer
-    (dedup_minhash_lsh: band build + verify both read the staged
-    table)."""
-    from distributed_system_spark.queries import load_all
-
-    reg = load_all()
-    want = sorted(
-        map(tuple, reg["dedup_minhash_lsh"].fn(spark, sf_dir).collect())
-    )
-    monkeypatch.setenv("SPARK_GRAFT_SETS_STAGING", "parquet")
-    got = sorted(
-        map(tuple, reg["dedup_minhash_lsh"].fn(spark, sf_dir).collect())
-    )
-    assert got == want and want
-
-
 def test_substr_dup_positions_window_twin(spark, sf_dir):
     """_substr_dup_positions (default, r14 window form) must emit
     EXACTLY the groupBy+join-back shape's rows: ``min(doc_id) over

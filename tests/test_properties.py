@@ -127,38 +127,6 @@ def test_partitioners_preserve_rows(spark, keys):
         assert sorted(r["k"] for r in part.collect()) == want
 
 
-def test_registry_prefix_prioritizes_unverified_queries():
-    """A prefix-sampling correctness harness capped at 50 queries must
-    see every query that has never had an external green row (in any
-    round's window) BEFORE already-verified ones — this is what
-    completes union coverage of the registry across successive
-    windows.  _EXTERNALLY_VERIFIED accumulates each round's green
-    rows (rounds 1-3 frozen list + the r4 window fold-in)."""
-    from distributed_system_spark.queries import (
-        _EXTERNALLY_VERIFIED,
-        _KNOWN_AT_FREEZE,
-        load_all,
-    )
-
-    reg = load_all()
-    assert _KNOWN_AT_FREEZE <= set(reg)
-    unverified = [n for n in reg if n not in _EXTERNALLY_VERIFIED]
-    prefix = list(reg)[: len(unverified)]
-    assert set(prefix) == set(unverified)
-    # Within the unverified block, prior-round registrations outrank
-    # this round's additions, and they must ALL fit the 50-query
-    # external window — otherwise union coverage of the older surface
-    # stalls behind newcomers.  If this ever fails, fold the latest
-    # CORRECTNESS_r* greens into _EXTERNALLY_VERIFIED (the
-    # _R4_VERIFIED precedent) and snapshot new names into the
-    # known-registry set (_ADDED_R5 precedent) — don't widen the
-    # window.
-    older_unverified = [n for n in unverified if n in _KNOWN_AT_FREEZE]
-    assert len(older_unverified) <= 50, older_unverified
-    window = list(reg)[:50]
-    assert set(older_unverified) <= set(window)
-
-
 @given(
     st.lists(
         st.text(st.characters(codec="utf-8"), max_size=40), max_size=30
