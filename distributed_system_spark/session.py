@@ -35,6 +35,16 @@ RUNTIME_CONF: dict[str, str] = {
     # dates) raises instead of turning into NULLs, whatever the
     # caller's session had set.
     "spark.sql.ansi.enabled": "true",
+    # PySpark wraps every DataFrame/Column call in a call-site capture
+    # that walks the Python stack and makes ~4 extra py4j round trips
+    # (active session, conf read, origin set/clear): 100 F.col calls
+    # took 140-150 ms with it, 34-45 ms without (4-core host).  Errors
+    # keep their error class; they only lose the Python file:line in
+    # the query context.  PySpark reads this flag ONCE per process, on
+    # its first API call with an active session, so the pin takes
+    # effect for sessions built by get_spark and is a no-op for an
+    # external session that has already made calls.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -1446,6 +1446,26 @@ def test_minhash_band_docs_drops_null_text(spark):
     assert ids == {"d1"}
 
 
+def test_band_build_quotes_column_names(spark, sf_dir):
+    """The band build is SQL text, so it quotes its column names: a
+    backtick or a dot in a name selects that column, it never ends
+    the identifier or reaches into a struct."""
+    from distributed_system_spark.operators.dedup import (
+        _bands_from_token_array,
+        doc_token_sets,
+        minhash_band_signatures_sets,
+    )
+    from distributed_system_spark.sources.tables import load_table as lt
+
+    sets_ = doc_token_sets(lt(spark, sf_dir, "documents"))
+    odd = sets_.toDF("doc`id", "tok.set`")
+    want = minhash_band_signatures_sets(sets_)
+    got = _bands_from_token_array(odd, "doc`id", "tok.set`", 8, 2)
+    assert got.schema == want.schema
+    assert want.exceptAll(got).count() == 0
+    assert got.exceptAll(want).count() == 0
+
+
 def test_sliced_forms_equal_one_shot(spark):
     """The round-11 disk-bounded *_sliced variants must equal their
     one-shot twins EXACTLY on the sf0.01 corpus (10x the oracle

@@ -245,27 +245,44 @@ def test_fingerprint_is_shuffle_free(spark, sf_dir):
     assert "BroadcastExchange" not in plan, plan
 
 
-def test_widen_if_narrow_semantics(spark, sf_dir):
+def test_widen_if_narrow_semantics(spark, sf_dir, monkeypatch):
     """widen_if_narrow fires ONLY when the input is BOTH narrower than
     cores AND worth a slot's floor of bytes: a tiny single-row-group
     scan is returned untouched (exchange would cost more than the map
     stage), forcing the floor to 0 widens it to defaultParallelism,
     and an already-wide frame is returned as the SAME object — the
-    no-ops that make it safe to leave in 100 TB plans."""
-    from distributed_system_spark.sources.tables import (
-        load_table,
-        widen_if_narrow,
-    )
+    no-ops that make it safe to leave in 100 TB plans.  Unknown input
+    size widens a narrow frame only.  The byte floor is tested first:
+    a frame under it comes back without its RDD ever being planned
+    (``DataFrame.rdd`` is a cached_property, so a built RDD would
+    show in the instance dict)."""
+    from distributed_system_spark.sources import tables
 
     par = spark.sparkContext.defaultParallelism
-    narrow = load_table(spark, sf_dir, "documents")
+    fresh = tables.load_table(spark, sf_dir, "documents")
+    # sf0.001 documents is ~KBs: under every floor -> untouched, unplanned
+    assert tables.widen_if_narrow(fresh) is fresh
+    assert "rdd" not in fresh.__dict__
+
+    narrow = tables.load_table(spark, sf_dir, "documents")
     assert narrow.rdd.getNumPartitions() < par  # single row group
-    # sf0.001 documents is ~KBs: under every floor -> untouched
-    assert widen_if_narrow(narrow) is narrow
-    widened = widen_if_narrow(narrow, min_slot_bytes=0)
-    assert widened.rdd.getNumPartitions() == par
     wide = narrow.repartition(par)
-    assert widen_if_narrow(wide, min_slot_bytes=0) is wide  # already wide
+    # (frame, min_slot_bytes) -> widened?  Every cell of narrow/wide x
+    # below/above floor, then both layouts at unknown size.
+    for df, floor, widens in [
+        (narrow, tables.WIDEN_SLOT_BYTES_DEFAULT, False),
+        (narrow, 0, True),
+        (wide, tables.WIDEN_SLOT_BYTES_DEFAULT, False),
+        (wide, 0, False),
+    ]:
+        out = tables.widen_if_narrow(df, min_slot_bytes=floor)
+        if widens:
+            assert out.rdd.getNumPartitions() == par
+        else:
+            assert out is df
+    monkeypatch.setattr(tables, "_input_bytes", lambda df: None)
+    assert tables.widen_if_narrow(narrow).rdd.getNumPartitions() == par
+    assert tables.widen_if_narrow(wide) is wide
 
 
 def test_sessionize_windows_partition_by_user(spark, sf_dir):

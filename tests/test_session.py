@@ -3,7 +3,8 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.errors import ArithmeticException
+import pyspark.sql.functions as F
+from pyspark.errors import AnalysisException, ArithmeticException
 
 from distributed_system_spark.session import tune_session
 
@@ -21,3 +22,14 @@ def test_tune_session_pins_ansi(spark):
             spark.sql(sql).collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", was)
+
+
+def test_errors_keep_their_class_without_origin_capture(spark):
+    """RUNTIME_CONF turns off PySpark's per-call Python call-site
+    capture (a py4j round-trip tax on every Column call); a bad column
+    still raises the same classified error, only without the Python
+    file:line in its query context."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException) as err:
+        spark.range(1).select(F.col("no_such_col")).schema
+    assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
