@@ -35,6 +35,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from distributed_system_spark.queries import load_all  # noqa: E402
 from distributed_system_spark.session import get_spark  # noqa: E402
 
+# Warm best-of-N per query.  r11->r12: single-shot timing let a broad
+# ~9-25% machine/JVM band drift 52 of 55 queries with no code cause
+# (r11 verdict item #2); the second pass costs ~2 min of bench wall and
+# removes the band from round-over-round comparisons.  First round
+# reported with best_of=2: r12 (the JSON carries "best_of" so
+# histories compare like with like).
+BEST_OF = 2
+
 HEADLINE = [
     "wordcount",          # flagship (reference's only workload)
     "mj_wordcount",       # same, through the maple→juice fidelity layer
@@ -262,26 +270,18 @@ def main() -> int:
     # warmup: JVM + codegen + FS metadata
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    # Warm best-of-N per query (default 2, BENCH_BEST_OF to change).
-    # r11->r12: single-shot timing let a broad ~9-25% machine/JVM band
-    # drift 52 of 55 queries with no code cause (r11 verdict item #2);
-    # the second pass costs ~2 min of bench wall and removes the band
-    # from round-over-round comparisons.  First round reported with
-    # best_of=2: r12 (the JSON carries "best_of" so histories compare
-    # like with like).
-    best_of = max(1, int(os.environ.get("BENCH_BEST_OF", "2")))
     times: dict[str, float] = {}
     for name in names:
         times[name] = min(
             _time_query(spark, registry, name, sf_dir)
-            for _ in range(best_of)
+            for _ in range(BEST_OF)
         )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     out = {
         "metric": "headline_queries_total",
         "unit": "sec",
-        "best_of": best_of,
+        "best_of": BEST_OF,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     prior, prior_bo = _latest_prior_times()
@@ -291,7 +291,7 @@ def main() -> int:
     # best_of are excluded (count surfaced so a methodology change
     # is visible in the record, not silent).
     skipped_bo = sorted(
-        n for n in times if n in prior and prior_bo.get(n, 1) != best_of
+        n for n in times if n in prior and prior_bo.get(n, 1) != BEST_OF
     )
     if skipped_bo:
         out["delta_skipped_best_of_mismatch"] = len(skipped_bo)
@@ -330,7 +330,7 @@ def main() -> int:
         )
     out["queries"] = times
     out["value"] = round(sum(times.values()), 3)
-    _bench_sf1_subset(spark, registry, out, sf_dir, full_run=not args)
+    _bench_sf1_subset(spark, registry, out["sf"], sf_dir, full_run=not args)
     line = json.dumps(out, separators=(",", ":"))
     if len(line) > 1900 and "deltas" in out:
         # last-resort trim to stay inside the driver's capture window
@@ -368,18 +368,16 @@ SF1_SUBSET = [
 
 
 def _bench_sf1_subset(
-    spark, registry, out: dict, sf_dir: str, full_run: bool
+    spark, registry, sf, sf_dir: str, full_run: bool
 ) -> None:
     """Time SF1_SUBSET at the manufactured sf1 and print the times as
     their own JSON line (``sf1_cpus``/``sf1_queries``/``sf1_total``),
-    ahead of the contract line; ``out`` is only read for its ``sf``.
+    ahead of the contract line.
 
     Runs only on a full HEADLINE pass over the standard sf0.1 dir
-    (--only iteration runs and foreign SF dirs skip it), and can be
-    disabled with SPARK_GRAFT_SF1_SUBSET=0."""
-    if not full_run or out.get("sf") != 0.1:
-        return
-    if os.environ.get("SPARK_GRAFT_SF1_SUBSET", "1") == "0":
+    (``sf`` is that dir's parsed scale factor; --only iteration runs
+    and foreign SF dirs skip it)."""
+    if not full_run or sf != 0.1:
         return
     import atexit
     import shutil

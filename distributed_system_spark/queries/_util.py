@@ -54,28 +54,6 @@ def sql_dround(expr: str, out: int = 2, scale: int = 6) -> str:
     return f"CAST(round(CAST({expr} AS DECIMAL(18,{scale})), {out}) AS DOUBLE)"
 
 
-def sequential_batches() -> bool:
-    """True when a query's independent ingest batches must run
-    SEQUENTIALLY with the forced-gc disk discipline between
-    corpus-scale shuffles (instead of overlapping via a thread pool,
-    guide §2.6).  Two triggers (r13 ADVICE: don't infer the disk
-    discipline from a logging knob alone):
-
-    - ``SPARK_GRAFT_SEQUENTIAL_BATCHES`` — the dedicated flag for a
-      disk-valved large-scale run launched WITHOUT the measurement
-      harness;
-    - ``SPARK_GRAFT_PHASE_LOG`` — the diskbound harness's phase log
-      implies it, because wall/scratch attribution needs
-      non-overlapping phase windows.
-    """
-    import os
-
-    return bool(
-        os.environ.get("SPARK_GRAFT_SEQUENTIAL_BATCHES")
-        or os.environ.get("SPARK_GRAFT_PHASE_LOG")
-    )
-
-
 def sql_davg(expr: str, scale: int = 4, out: int = 6) -> str:
     return (
         f"round(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"

@@ -27,9 +27,6 @@ from distributed_system_spark.operators.dedup import (
     token_set_keyed,
 )
 from distributed_system_spark.queries import register
-from distributed_system_spark.queries._util import (
-    sequential_batches as _sequential_batches,
-)
 from distributed_system_spark.sources.tables import load_table
 
 # staging roots already scheduled for atexit cleanup (one callback per
@@ -38,28 +35,9 @@ from distributed_system_spark.sources.tables import load_table
 _ATEXIT_ROOTS: set[str] = set()
 
 
-def _slice_count(env_name: str, default: int = 4) -> int:
-    """Validated slice count for the bounded-disk dedup forms.
-
-    The bucket key is the first two hash hex digits — a 256-value
-    space — so K must sit in [1, 256]: K <= 0 would make the
-    ``% n_slices`` bucket expression null (every slice filter empty —
-    silently wrong output), and K > 256 would write permanently-empty
-    slices past bucket 255 (r11 ADVICE: enforce the documented
-    contract instead of failing silently)."""
-    import os
-
-    raw = os.environ.get(env_name, str(default))
-    try:
-        k = int(raw)
-    except ValueError:
-        raise ValueError(f"{env_name} must be an integer, got {raw!r}")
-    if not 1 <= k <= 256:
-        raise ValueError(
-            f"{env_name} must be in [1, 256] (two-hex-digit bucket "
-            f"space), got {k}"
-        )
-    return k
+# Slice count K for both bounded-disk ``*_sliced`` forms; their bucket
+# key is the first two hash hex digits, so K must stay in [1, 256].
+_SLICES = 4
 
 
 def _staging_root(prefix: str, sf_dir: str, n_slices: int) -> str:
@@ -85,61 +63,6 @@ def _staging_root(prefix: str, sf_dir: str, n_slices: int) -> str:
         _ATEXIT_ROOTS.add(root)
         atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
-
-def _phase(name: str):
-    """Context manager stamping a named phase's [t0, t1] wall-clock
-    window as a JSON line into ``$SPARK_GRAFT_PHASE_LOG`` (no-op when
-    the env is unset, the normal case).  Exists so
-    tools/diskbound.py can correlate the incremental forms' EAGER
-    phases (day-0 index build vs each arriving batch) with its
-    scratch-sampling timeline and report marginal per-batch cost
-    separately from the one-time build — the standing-index forms'
-    product claim is "cost = the day's arrivals, not the corpus",
-    and that claim needs the split measured, not inferred (r12
-    verdict item #1).  The lazy merge-on-read readout isn't a phase:
-    it executes at the caller's action, so the harness reports it as
-    the post-last-phase remainder."""
-    import contextlib
-    import json
-    import os
-    import time
-
-    @contextlib.contextmanager
-    def _cm():
-        path = os.environ.get("SPARK_GRAFT_PHASE_LOG")
-        if not path:
-            yield
-            return
-        t0 = time.time()
-        # Open-window stamp at ENTRY (t1 null) so a run the harness
-        # aborts MID-phase still attributes the partial window to the
-        # right phase instead of folding it into the synthetic
-        # readout remainder (observed: the first sf1000d day-0 abort
-        # reported 1490 s of day-0 work as "readout").  The exit
-        # stamp below supersedes it (diskbound keeps the closed form).
-        with open(path, "a") as fh:
-            fh.write(
-                json.dumps(
-                    {"phase": name, "t0": round(t0, 3), "t1": None}
-                )
-                + "\n"
-            )
-        try:
-            yield
-        finally:
-            with open(path, "a") as fh:
-                fh.write(
-                    json.dumps(
-                        {
-                            "phase": name,
-                            "t0": round(t0, 3),
-                            "t1": round(time.time(), 3),
-                        }
-                    )
-                    + "\n"
-                )
-
-    return _cm()
 
 
 _TOKS_SQL = """
@@ -2801,7 +2724,7 @@ def dedup_substring_chains_sliced(
     shuffle (distinct + frequency join over ~1 row/token) is what ran
     a single node out of spill disk at the fifth decade (sf1000d, 50 M
     docs — SCALE.md).  This variant partitions the shingle HASH SPACE
-    into K slices (first md5 hex digit mod K) and processes the
+    into K slices (first two md5 hex digits mod K) and processes the
     slices SEQUENTIALLY: slice k's distinct/frequency/dup-join
     touches only its own ~1/K of the position rows, its duplicated
     positions land in a parquet staging piece, and its shuffle files
@@ -2813,15 +2736,14 @@ def dedup_substring_chains_sliced(
     oracle are unchanged.
 
     On a real cluster the one-shot plan is right (aggregate disk
-    scales with executors); this form exists to complete — and
-    measure — the fifth decade on one machine, and is the shape to
-    reach for when scratch space, not CPU, is the binding constraint.
-    K: ``SPARK_GRAFT_SUBSTR_SLICES`` (default 4, max 256 — the bucket
-    key is the first TWO hex digits, 256 values, so slices stay even
-    for any K that divides the space reasonably; a single-digit key
-    capped K at 16 and made K=12's bucket 0 double-width, measured as
-    a 2/16-of-the-space spill spike at sf1000d)."""
-    n_slices = _slice_count("SPARK_GRAFT_SUBSTR_SLICES")
+    scales with executors); this form is the shape to reach for when
+    scratch space, not CPU, is the binding constraint.  K is
+    ``_SLICES``; the bucket key is the first TWO hex digits (256
+    values), so slices stay even for any K that divides the space
+    reasonably (a single-digit key capped K at 16 and made K=12's
+    bucket 0 double-width, measured as a 2/16-of-the-space spill
+    spike at sf1000d)."""
+    n_slices = _SLICES
     root = _staging_root("dss-substr-sliced", sf_dir, n_slices)
     # Stage the planted corpus ONCE: the corpus build is a full-corpus
     # self-join whose sort spill is a ~35 GB scratch CONSTANT at the
@@ -2904,7 +2826,9 @@ def dedup_substring_chains_incr(
     pieces.  At 100 TB/day this is the only shape that works — the
     one-shot form's cost grows with TOTAL corpus size every run,
     this one's with the day's arrivals."""
-    import os
+    import functools
+
+    from distributed_system_spark.concurrency import eager_all
 
     docs = load_table(spark, sf_dir, "documents")
     root = _staging_root("dss-substr-incr", sf_dir, 1)
@@ -2913,117 +2837,42 @@ def dedup_substring_chains_incr(
     # would otherwise re-run per batch — the sliced form's lesson),
     # then split into arrival batches.  The operator itself never
     # re-reads history after day 0.
-    with _phase("corpus_stage"):
-        _substr_corpus(docs).write.mode("overwrite").parquet(
-            f"{root}/corpus"
-        )
-    # Sequential, phase-stamped execution is the MEASUREMENT mode:
-    # tools/diskbound.py sets SPARK_GRAFT_PHASE_LOG to attribute
-    # wall/scratch to each phase, which needs non-overlapping windows
-    # and the forced-gc disk discipline between corpus-scale
-    # shuffles.  Without the harness the three day jobs — which are
-    # mutually independent by construction (each shingles and writes
-    # only its own docs to its own directory; merging happens at
-    # readout) — are submitted from a thread pool instead so Spark
-    # overlaps them (guide §2.6), and the gc pauses are skipped (they
-    # exist to release dead shuffle files under a disk valve, not to
-    # help an unconstrained run).
-    # (SPARK_GRAFT_SEQUENTIAL_BATCHES forces the sequential+gc disk
-    # discipline without the harness — r13 ADVICE.)
-    measured = _sequential_batches()
-    if measured:
-        # Release the staging join's shuffle files BEFORE day 0
-        # starts — without this the dead spill (measured 45+ GB at
-        # sf1000d before the filtered-join rewrite) sits under the
-        # whole index build and is what pushed both day-0-sliced
-        # attempts over the disk valve.  Same discipline as the
-        # sliced form's per-slice gc.
-        spark.sparkContext._jvm.System.gc()
+    _substr_corpus(docs).write.mode("overwrite").parquet(f"{root}/corpus")
     corpus = spark.read.schema("doc_id BIGINT, text STRING").parquet(
         f"{root}/corpus"
     )
-    # Batch cuts are env-tunable for the DECADE measurement only (the
-    # marginal-cost harness makes day 0 ~the corpus and the batches a
-    # day's arrivals); the registered oracle assumes the defaults —
-    # its report is restricted to doc_id >= the first cut.
-    c1, c2 = (
-        int(x)
-        for x in os.environ.get(
-            "SPARK_GRAFT_SUBSTR_INCR_CUTS", "400,700"
-        ).split(",")
-    )
-    day0_pred = F.col("doc_id") < c1
-    # Measurement-only HISTORY CAP: the full sf1000d standing index
-    # is ~80 GB of real product mass (measured 5 GB per 1/16
-    # hash-slice, 2026-08-16 run) — index MASS, not spill, so no
-    # slicing can fit it on one 69-GB-free node; on a cluster it is
-    # the sharded state.  Capping day 0 to doc_id < DAY0_MAX models
-    # the same claim (standing index over a large history, tiny
-    # arriving batches) at a history whose index fits the node; docs
-    # in [DAY0_MAX, c1) are simply never ingested.  Unset (the
-    # default, and every registered/oracle run): full history.
-    day0_max = os.environ.get("SPARK_GRAFT_SUBSTR_INCR_DAY0_MAX")
-    if day0_max is not None:
-        day0_pred = day0_pred & (F.col("doc_id") < int(day0_max))
+    # The registered oracle restricts its report to doc_id >= 400,
+    # the first cut.
     batches = [
-        ("0", day0_pred),
-        ("1", (F.col("doc_id") >= c1) & (F.col("doc_id") < c2)),
-        ("2", F.col("doc_id") >= c2),
+        ("0", F.col("doc_id") < 400),
+        ("1", (F.col("doc_id") >= 400) & (F.col("doc_id") < 700)),
+        ("2", F.col("doc_id") >= 700),
     ]
-    # Day-0 (the history backfill) is the one corpus-scale shuffle in
-    # this form; at the fifth decade its single groupBy coexisting
-    # with the growing freq parquet exceeds one node's scratch, so it
-    # can be sliced over the hash space exactly like the *_sliced
-    # forms (sequential 1/K shuffles, files released between slices).
-    # K=1 (the default, and the cluster plan) is the plain groupBy;
-    # the union over slices == the unsliced aggregate because hash
-    # buckets partition the space.  Every day writes under a slice=
-    # level so partition discovery sees one consistent depth.
-    k0 = _slice_count("SPARK_GRAFT_SUBSTR_INCR_DAY0_SLICES", default=1)
-    bucket0 = F.conv(F.substring(F.hex("h"), 1, 2), 16, 10).cast(
-        "int"
-    ) % k0
+
     def _ingest_day(day: str, pred) -> None:
-        with _phase(f"day{day}"):
-            t_b, pos_b = _substr_positions_from_corpus(corpus.filter(pred))
-            if day != "0":
-                # A batch's own rows are the day's arrivals — staged
-                # once at ingest so the readout never re-shingles
-                # them either.
-                pos_b.write.mode("overwrite").parquet(
-                    f"{root}/pos/day={day}"
-                )
-                t_b.select("doc_id", "n").write.mode("overwrite").parquet(
-                    f"{root}/meta/day={day}"
-                )
-                pos_b = spark.read.schema(
-                    "doc_id BIGINT, j BIGINT, h BINARY"
-                ).parquet(f"{root}/pos/day={day}")
-            slices = range(k0) if day == "0" else (0,)
-            for k in slices:
-                p_k = pos_b if len(slices) == 1 else pos_b.filter(
-                    bucket0 == k
-                )
-                p_k.groupBy("h").agg(
-                    F.min("doc_id").alias("mn"),
-                    F.max("doc_id").alias("mx"),
-                ).write.mode("overwrite").parquet(
-                    f"{root}/freq/day={day}/slice={k}"
-                )
-                if len(slices) > 1:
-                    spark.sparkContext._jvm.System.gc()
+        t_b, pos_b = _substr_positions_from_corpus(corpus.filter(pred))
+        if day != "0":
+            # A batch's own rows are the day's arrivals — staged once
+            # at ingest so the readout never re-shingles them either.
+            pos_b.write.mode("overwrite").parquet(f"{root}/pos/day={day}")
+            t_b.select("doc_id", "n").write.mode("overwrite").parquet(
+                f"{root}/meta/day={day}"
+            )
+            pos_b = spark.read.schema(
+                "doc_id BIGINT, j BIGINT, h BINARY"
+            ).parquet(f"{root}/pos/day={day}")
+        pos_b.groupBy("h").agg(
+            F.min("doc_id").alias("mn"),
+            F.max("doc_id").alias("mx"),
+        ).write.mode("overwrite").parquet(f"{root}/freq/day={day}")
 
-    if measured:
-        for day, pred in batches:
-            _ingest_day(day, pred)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        run = inheritable_thread_target(spark)(_ingest_day)
-        with ThreadPoolExecutor(max_workers=len(batches)) as pool:
-            list(pool.map(lambda b: run(*b), batches))
+    # The three day jobs are mutually independent by construction
+    # (each shingles and writes only its own docs to its own
+    # directory; merging happens at readout), so they are submitted
+    # together and Spark overlaps them (guide §2.6).
+    eager_all(
+        spark, *(functools.partial(_ingest_day, *b) for b in batches)
+    )
     new_pos = spark.read.schema(
         "doc_id BIGINT, j BIGINT, h BINARY"
     ).parquet(f"{root}/pos")
@@ -3425,8 +3274,7 @@ def dedup_incremental_capped_sliced(
     sf1000d attempt died at slice 4 because the VERIFY stage's output
     mass — candidate token arrays — is not divided by band-space
     slicing (SCALE.md round-11 diagnosis).  This form slices BOTH
-    axes, K = ``SPARK_GRAFT_LSH_SLICES`` (default 4, clamped to
-    [1, 256]):
+    axes, K = ``_SLICES``:
 
     - **Stage 0** writes the two corpus-derived inputs to parquet
       ONCE, both built map-side with zero shuffle: the band
@@ -3460,7 +3308,7 @@ def dedup_incremental_capped_sliced(
     the one-shot plan wins (aggregate disk scales with executors) —
     this is the form that finishes the fifth decade on one machine."""
     docs = load_table(spark, sf_dir, "documents")
-    n_slices = _slice_count("SPARK_GRAFT_LSH_SLICES")
+    n_slices = _SLICES
     root = _staging_root("dss-cappedsl", sf_dir, n_slices)
     # ONE corpus scan for stage 0 (r13): the keyed set table stages
     # first, then the band table derives from the STAGED ts arrays

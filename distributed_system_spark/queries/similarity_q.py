@@ -2391,9 +2391,11 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-scale DECIMAL so the merge is order-insensitive
     (queries/_util.py contract)."""
     import atexit
+    import functools
     import hashlib
     import shutil
 
+    from distributed_system_spark.concurrency import eager_all
     from distributed_system_spark.queries._util import dsum
 
     root = (
@@ -2426,23 +2428,16 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The three delta jobs are INDEPENDENT (each assigns and writes
     # only its own day's vectors to its own directory — overwrite
-    # mode, no shared state), so they are submitted from a small
-    # thread pool and Spark schedules them concurrently: the next
-    # day's tasks back-fill executors freed by the previous day's
-    # tail (guide §2.6 "overlap independent jobs").  This is the
+    # mode, no shared state), so they are submitted together
+    # (concurrency.eager_all) and Spark schedules them concurrently:
+    # the next day's tasks back-fill executors freed by the previous
+    # day's tail (guide §2.6 "overlap independent jobs").  This is the
     # backfill/catch-up replay shape — in steady state each arriving
     # day still costs one linear delta pass, which is the property
     # the oracle certifies (merged postings == full rebuild), and
     # that certificate is unaffected by the submission order.
     # Measured warm at sf0.1: the three-day wall 2.9 s -> 1.9-2.6 s.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(
-            pool.map(inheritable_thread_target(spark)(_write_day), range(3))
-        )
+    eager_all(spark, *(functools.partial(_write_day, d) for d in range(3)))
     idx = spark.read.parquet(*[f"{root}/d{d}" for d in range(3)])
     return idx.groupBy("cell").agg(
         F.count(F.lit(1)).alias("n_vecs"),

@@ -13,9 +13,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from distributed_system_spark.queries import register
-from distributed_system_spark.queries._util import (
-    sequential_batches as _sequential_batches,
-)
 from distributed_system_spark.sources.tables import (
     WIDEN_SLOT_BYTES_DENSE,
     load_table,
@@ -617,6 +614,12 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Ascending train doc_id cuts for contamination_incr: len + 1 arrival
+# batches.  The answer is boundary-independent by construction (counts
+# merge, hits union); tests/test_llm_ops.py pins that at other cuts.
+_CONTAM_CUTS = (250,)
+
+
 @register(
     "contamination_incr",
     oracle=_CONTAMINATION_ORACLE,
@@ -650,12 +653,10 @@ def contamination_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg groupBy.  The one-shot form re-shingles the whole
     train corpus every run — at 100 TB/day this form's cost is the
     day's data, full stop."""
-    import os
+    import functools
 
-    from distributed_system_spark.queries.dedup_q import (
-        _phase,
-        _staging_root,
-    )
+    from distributed_system_spark.concurrency import eager_all
+    from distributed_system_spark.queries.dedup_q import _staging_root
 
     docs = load_table(spark, sf_dir, "documents")
     b = F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2)
@@ -664,58 +665,15 @@ def contamination_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", split.alias("split"), F.split("text", " ", -1).alias("toks")
     )
     root = _staging_root("dss-contam-incr", sf_dir, 1)
-    with _phase("eval_index"):
-        base.filter(F.col("split") == "test").select(
-            F.col("doc_id").alias("test_doc"),
-            F.explode(_distinct_8grams()).alias("h"),
-        ).write.mode("overwrite").parquet(f"{root}/eval_index")
+    base.filter(F.col("split") == "test").select(
+        F.col("doc_id").alias("test_doc"),
+        F.explode(_distinct_8grams()).alias("h"),
+    ).write.mode("overwrite").parquet(f"{root}/eval_index")
     eval_index = spark.read.schema("test_doc BIGINT, h BINARY").parquet(
         f"{root}/eval_index"
     )
     train = base.filter(F.col("split") == "train")
-    # Batch boundaries are env-tunable (comma-separated ascending
-    # cuts -> len+1 batches) for the invariance test and the decade
-    # measurement: the answer is boundary-independent BY CONSTRUCTION
-    # (counts merge, hits union) — tests/test_llm_ops.py pins it at
-    # single cuts {1, 100, 499} and a multi-cut geometry.
-    cuts = [
-        int(x)
-        for x in os.environ.get("SPARK_GRAFT_CONTAM_SPLIT", "250").split(
-            ","
-        )
-    ]
-    # Grams staging is transient scratch (each batch's pieces derive
-    # from it in the same pass); the decade harness drops it after
-    # derivation so measured peak disk reflects the product shape.
-    # Kept by default because the provenance tests inspect it.
-    drop_grams = os.environ.get("SPARK_GRAFT_CONTAM_DROP_GRAMS") == "1"
-    # Measurement-only TRAIN EXCLUSION ("lo:hi"): drop train docs in
-    # [lo, hi) before batching, so a decade run can pair a large
-    # backfill history with tiny arrival batches without ingesting
-    # the mass in between — the standing (h, n) frequency index over
-    # the FULL sf1000d train split is distinct-gram-scale (tens of
-    # GB of real index mass, cluster-sharded state), same wall the
-    # substring form measured.  Unset (the default, and every
-    # registered/oracle run): all train docs are ingested.
-    excl = os.environ.get("SPARK_GRAFT_CONTAM_EXCLUDE")
-    if excl is not None:
-        lo, hi = (int(x) for x in excl.split(":"))
-        train = train.filter(
-            (F.col("doc_id") < lo) | (F.col("doc_id") >= hi)
-        )
-    bounds = [None, *cuts, None]
-    # Sequential, phase-stamped batches are the MEASUREMENT mode
-    # (tools/diskbound.py sets SPARK_GRAFT_PHASE_LOG; attribution
-    # needs non-overlapping windows, and the per-batch forced gc
-    # releases dead shuffle files under a disk valve).  Otherwise
-    # the batches — mutually independent by construction (each
-    # shingles only its own docs and probes the FROZEN eval index,
-    # never another batch's pieces) — are submitted from a thread
-    # pool so Spark overlaps them (guide §2.6), and the gc pauses
-    # are skipped.
-    # (SPARK_GRAFT_SEQUENTIAL_BATCHES forces the sequential+gc disk
-    # discipline without the harness — r13 ADVICE.)
-    measured = _sequential_batches()
+    bounds = [None, *_CONTAM_CUTS, None]
 
     def _ingest_batch(i: int) -> None:
         day = str(i + 1)
@@ -725,55 +683,33 @@ def contamination_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
             pred = pred & (F.col("doc_id") >= lo)
         if hi is not None:
             pred = pred & (F.col("doc_id") < hi)
-        with _phase(f"day{day}"):
-            # One shingle pass per batch: grams staged, both derived
-            # pieces (frequency + probe hits) read the staging.
-            train.filter(pred).select(
-                F.col("doc_id").alias("train_doc"),
-                F.explode(_distinct_8grams()).alias("h"),
-            ).write.mode("overwrite").parquet(f"{root}/grams/day={day}")
-            g = spark.read.schema("train_doc BIGINT, h BINARY").parquet(
-                f"{root}/grams/day={day}"
-            )
-            g.groupBy("h").agg(F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(f"{root}/freq/day={day}")
-            g.join(eval_index, "h").select(
-                "test_doc", "train_doc", "h"
-            ).write.mode("overwrite").parquet(f"{root}/hits/day={day}")
-            if drop_grams:
-                import shutil
+        # One shingle pass per batch: grams staged, both derived
+        # pieces (frequency + probe hits) read the staging.
+        train.filter(pred).select(
+            F.col("doc_id").alias("train_doc"),
+            F.explode(_distinct_8grams()).alias("h"),
+        ).write.mode("overwrite").parquet(f"{root}/grams/day={day}")
+        g = spark.read.schema("train_doc BIGINT, h BINARY").parquet(
+            f"{root}/grams/day={day}"
+        )
+        g.groupBy("h").agg(F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(f"{root}/freq/day={day}")
+        g.join(eval_index, "h").select(
+            "test_doc", "train_doc", "h"
+        ).write.mode("overwrite").parquet(f"{root}/hits/day={day}")
 
-                # driver-local /tmp staging (correct in local mode;
-                # a cluster deployment would route this through the
-                # Hadoop FileSystem API like streams._index_exists)
-                shutil.rmtree(f"{root}/grams/day={day}")
-            if measured:
-                # Release this batch's groupBy/probe-join shuffle
-                # files before the next batch shuffles its own —
-                # without the forced ContextCleaner gc they pile up
-                # across the whole multi-cut backfill (the substring
-                # form's per-slice discipline; dead spill under a
-                # growing index is what aborted the first sf1000d
-                # substring runs).
-                spark.sparkContext._jvm.System.gc()
-
-    if measured:
-        for i in range(len(bounds) - 1):
-            _ingest_batch(i)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        run = inheritable_thread_target(spark)(_ingest_batch)
-        # 2-4 jobs in flight is plenty (guide §2.6): enough to fill
-        # each other's stage tails, bounded so an env-tuned multi-cut
-        # backfill doesn't flood the scheduler.
-        with ThreadPoolExecutor(
-            max_workers=min(4, len(bounds) - 1)
-        ) as pool:
-            list(pool.map(run, range(len(bounds) - 1)))
+    # The batches are mutually independent by construction (each
+    # shingles only its own docs and probes the FROZEN eval index,
+    # never another batch's pieces), so they are submitted together
+    # and Spark overlaps them (guide §2.6).
+    eager_all(
+        spark,
+        *(
+            functools.partial(_ingest_batch, i)
+            for i in range(len(bounds) - 1)
+        ),
+    )
     hits = spark.read.schema(
         "test_doc BIGINT, train_doc BIGINT, h BINARY"
     ).parquet(f"{root}/hits")

@@ -38,3 +38,28 @@ def test_eager_all_checkpoints_match_sequential(spark):
         assert sorted(map(tuple, s.collect())) == sorted(
             map(tuple, p.collect())
         )
+
+
+def test_incremental_queries_build_without_pinned_threads(
+    spark, sf_dir, monkeypatch
+):
+    """Under PYSPARK_PIN_THREAD=false, pyspark.inheritable_thread_target
+    returns its argument unchanged — called on the session, the
+    session itself, which is not callable on a function.  The three
+    queries that overlap independent batch jobs submit them through
+    eager_all, which handles that mode; this patches in the
+    non-pinned behaviour and builds each one at sf0.001."""
+    import pyspark
+
+    from distributed_system_spark.queries import load_all
+
+    monkeypatch.setattr(
+        pyspark, "inheritable_thread_target", lambda f=None: f
+    )
+    reg = load_all()
+    for name in (
+        "ann_index_upsert",
+        "contamination_incr",
+        "dedup_substring_chains_incr",
+    ):
+        assert reg[name].fn(spark, sf_dir).count() > 0, name

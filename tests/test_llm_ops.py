@@ -1494,10 +1494,9 @@ def test_sliced_forms_equal_one_shot_awkward_k(spark, k, monkeypatch):
     sliced == one-shot equality is pinned across awkward K — K=1
     (degenerate single slice), K=3 and K=5 (256 % K != 0), K=8 — for
     BOTH disk-bounded families at sf0.001."""
-    from distributed_system_spark.queries import load_all
+    from distributed_system_spark.queries import dedup_q, load_all
 
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_SLICES", str(k))
-    monkeypatch.setenv("SPARK_GRAFT_LSH_SLICES", str(k))
+    monkeypatch.setattr(dedup_q, "_SLICES", k)
     reg = load_all()
     sf = "/root/testdata/sf0.001"
     for one_shot, sliced in (
@@ -1577,9 +1576,9 @@ def test_contamination_incr_batch_boundary_invariance(
     train arrivals are cut into batches (mergeable counts + unioned
     hits): pinned at a degenerate first batch (cut=1), an uneven cut
     (100), and a degenerate last batch (499)."""
-    from distributed_system_spark.queries import load_all
+    from distributed_system_spark.queries import load_all, text_q
 
-    monkeypatch.setenv("SPARK_GRAFT_CONTAM_SPLIT", cut)
+    monkeypatch.setattr(text_q, "_CONTAM_CUTS", (int(cut),))
     reg = load_all()
     sf = "/root/testdata/sf0.001"
     a = reg["contamination_check"].fn(spark, sf)
@@ -1589,18 +1588,15 @@ def test_contamination_incr_batch_boundary_invariance(
 
 
 def test_contamination_incr_multicut_and_dropped_grams(spark, monkeypatch):
-    """The decade-measurement knobs must not change the answer: a
-    multi-cut geometry (4 batches, awkward boundaries) with the
-    transient grams staging DROPPED after each batch's pieces derive
-    must still equal the one-shot contamination_check — mergeable
-    counts + unioned hits are cut-count-insensitive, and the derived
-    pieces carry everything the readout needs."""
+    """A multi-cut geometry (4 batches, awkward boundaries) must
+    still equal the one-shot contamination_check — mergeable counts
+    + unioned hits are cut-count-insensitive — and lay down one
+    frequency piece per batch."""
     import os
 
-    from distributed_system_spark.queries import load_all
+    from distributed_system_spark.queries import load_all, text_q
 
-    monkeypatch.setenv("SPARK_GRAFT_CONTAM_SPLIT", "100,250,400")
-    monkeypatch.setenv("SPARK_GRAFT_CONTAM_DROP_GRAMS", "1")
+    monkeypatch.setattr(text_q, "_CONTAM_CUTS", (100, 250, 400))
     reg = load_all()
     sf = "/root/testdata/sf0.001"
     a = reg["contamination_check"].fn(spark, sf)
@@ -1611,146 +1607,3 @@ def test_contamination_incr_multicut_and_dropped_grams(spark, monkeypatch):
     assert sorted(os.listdir(f"{root}/freq")) == [
         f"day={d}" for d in "1234"
     ]
-    assert not os.path.exists(f"{root}/grams/day=1")
-
-
-def test_substring_incr_day0_slices_invariant(spark, monkeypatch):
-    """Slicing the day-0 history backfill over the hash space (the
-    bounded-disk knob for the fifth decade) must not change the
-    report: hash buckets partition the shingle space, so the union of
-    per-slice (h, mn, mx) aggregates == the unsliced aggregate.
-    K=3 deliberately does not divide the 256-bucket space (the
-    geometry class that bit round 11)."""
-    from distributed_system_spark.queries import load_all
-
-    reg = load_all()
-    sf = "/root/testdata/sf0.001"
-    a = reg["dedup_substring_chains"].fn(spark, sf).filter("doc_id >= 400")
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_INCR_DAY0_SLICES", "3")
-    b = reg["dedup_substring_chains_incr"].fn(spark, sf)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def test_substring_incr_day0_history_cap(spark, monkeypatch, tmp_path):
-    """The measurement-only DAY0_MAX knob (decade history cap: the
-    full sf1000d standing index is ~80 GB of index MASS, so decade
-    runs pair a capped history with tiny arrival batches) must equal
-    the one-shot chain report over a corpus with the capped-out docs
-    PHYSICALLY absent — the capped incr run and the filtered rebuild
-    see the same history.  Cap at 200 with default cuts (400, 700):
-    docs [200, 400) are never ingested; every kept quote target's
-    predecessor is itself kept (d % 10 == 1 keeps d - 1 on both
-    sides of the gap), so physical removal == predicate filter."""
-    from distributed_system_spark.queries import load_all
-
-    reg = load_all()
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    filtered_sf = str(tmp_path / "sf")
-    docs.filter("doc_id < 200 OR doc_id >= 400").write.parquet(
-        f"{filtered_sf}/documents.parquet"
-    )
-    a = (
-        reg["dedup_substring_chains"]
-        .fn(spark, filtered_sf)
-        .filter("doc_id >= 400")
-    )
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_INCR_DAY0_MAX", "200")
-    b = reg["dedup_substring_chains_incr"].fn(spark, sf)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    # and the staged day-0 frequency piece really excludes the gap:
-    # no (h, mn, mx) row may carry a doc_id from [200, 400)
-    root = _expected_staging_root("dss-substr-incr", sf, 1)
-    day0 = spark.read.parquet(f"{root}/freq/day=0")
-    assert (
-        day0.filter(
-            "(mn >= 200 AND mn < 400) OR (mx >= 200 AND mx < 400)"
-        ).count()
-        == 0
-    )
-
-
-def test_contamination_incr_train_exclusion(spark, monkeypatch, tmp_path):
-    """The measurement-only EXCLUDE knob (decade geometry: a large
-    backfill history plus tiny arrival batches, the mass in between
-    never ingested) must equal the one-shot contamination_check over
-    a corpus with the excluded train docs PHYSICALLY absent — the
-    md5 split is per-doc, so removing docs cannot move any other
-    doc's split, and eval/val docs are kept on both sides."""
-    from distributed_system_spark.queries import load_all
-    from pyspark.sql import functions as F
-
-    reg = load_all()
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    b_hex = F.substring(
-        F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2
-    )
-    filtered_sf = str(tmp_path / "sf")
-    docs.filter(
-        (F.col("doc_id") < 100)
-        | (F.col("doc_id") >= 300)
-        | (b_hex >= "cd")  # non-train docs stay regardless
-    ).write.parquet(f"{filtered_sf}/documents.parquet")
-    a = reg["contamination_check"].fn(spark, filtered_sf)
-    monkeypatch.setenv("SPARK_GRAFT_CONTAM_EXCLUDE", "100:300")
-    b = reg["contamination_incr"].fn(spark, sf)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def test_incr_measured_mode_sequential_and_equal(
-    spark, monkeypatch, tmp_path
-):
-    """The standing-index incr forms run their independent batch jobs
-    from a thread pool by DEFAULT (guide §2.6 overlap), but fall back
-    to sequential, phase-stamped execution when the diskbound harness
-    sets SPARK_GRAFT_PHASE_LOG (wall/scratch attribution needs
-    non-overlapping windows).  Pin both properties: the measured
-    mode's answer equals the default mode's, and its stamped phase
-    windows are closed and strictly sequential."""
-    import json
-
-    from distributed_system_spark.queries import load_all
-
-    reg = load_all()
-    sf = "/root/testdata/sf0.001"
-    for name, phases in [
-        ("dedup_substring_chains_incr", ["day0", "day1", "day2"]),
-        ("contamination_incr", ["day1", "day2"]),
-    ]:
-        # Both runs share one per-process staging root (pre-cleaned
-        # at each call), so the first frame must be COLLECTED before
-        # the second run invalidates its staged files.
-        rows = sorted(map(tuple, reg[name].fn(spark, sf).collect()))
-        log = tmp_path / f"{name}.jsonl"
-        monkeypatch.setenv("SPARK_GRAFT_PHASE_LOG", str(log))
-        measured = sorted(map(tuple, reg[name].fn(spark, sf).collect()))
-        assert len(rows) > 0, name
-        assert rows == measured, name
-        monkeypatch.delenv("SPARK_GRAFT_PHASE_LOG")
-        closed = [
-            e
-            for e in map(json.loads, log.read_text().splitlines())
-            if e["t1"] is not None
-        ]
-        got = [e["phase"] for e in closed if e["phase"] in phases]
-        assert got == phases, (name, got)
-        days = [e for e in closed if e["phase"] in phases]
-        for prev, cur in zip(days, days[1:]):
-            assert cur["t0"] >= prev["t1"], (name, prev, cur)
-
-
-@pytest.mark.parametrize("bad", ["0", "-2", "257", "abc"])
-def test_slice_count_rejects_out_of_contract_k(bad, monkeypatch):
-    """K outside [1, 256] (or non-integer) must raise, not silently
-    produce empty slices (r11 ADVICE: K <= 0 nulls the % bucket and
-    every slice filter goes empty; K > 256 writes permanently-empty
-    slices past bucket 255)."""
-    from distributed_system_spark.queries.dedup_q import _slice_count
-
-    monkeypatch.setenv("SPARK_GRAFT_LSH_SLICES", bad)
-    with pytest.raises(ValueError):
-        _slice_count("SPARK_GRAFT_LSH_SLICES")

@@ -1510,40 +1510,3 @@ def test_span_corruption_zero_exchanges(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "aug_span_corruption")
     assert "Exchange" not in plan, plan
     assert plan.count("FileScan") == 1, plan
-
-
-def test_harness_forcing_action_keeps_span_report_join(spark, sf_dir):
-    """The measurement harnesses' forcing action must execute the
-    WHOLE plan.  Under a bare count(), Catalyst eliminates the
-    substring span report's final LEFT OUTER JOIN (its right side —
-    the per-doc span aggregate — has a unique join key, so the join
-    cannot change the row count) and with it the entire
-    dup-detection subtree: measured 2026-08-17, the one-shot form
-    "ran" sf100d in 8.1 s under count() vs 188 s for its sliced twin
-    computing the same answer.  tools/diskbound.py therefore forces
-    via count + sum(xxhash64(all columns)) in one aggregate
-    (bench.py/decade.py use a noop write, same guarantee).  This
-    pins both halves: the hash-agg plan keeps a join, the bare-count
-    plan is allowed to drop it (if a Spark upgrade stops dropping
-    it, only the second assert goes stale — delete it then)."""
-    from pyspark.sql import functions as F
-
-    df = REGISTRY["dedup_substring_chains"].fn(spark, sf_dir)
-    forced = (
-        df.agg(F.count(F.lit(1)), F.sum(F.xxhash64(*df.columns)))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Join h#" in forced or "Join [h" in forced or "SortMergeJoin" in forced, forced
-    counted = (
-        df.groupBy()
-        .count()
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SortMergeJoin" not in counted, (
-        "count() now keeps the dup join — the harness hazard this "
-        "test documents is gone; simplify diskbound._child if so"
-    )

@@ -16,7 +16,6 @@ import sys
 
 _SCRIPT = r"""
 import os, sys
-sys.path.insert(0, "/root/repo")
 from pyspark.sql import SparkSession
 
 flag_dir = sys.argv[1]

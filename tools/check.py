@@ -13,12 +13,13 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from distributed_system_spark.queries import load_all  # noqa: E402
 from distributed_system_spark.session import get_spark  # noqa: E402

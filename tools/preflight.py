@@ -15,8 +15,9 @@ from __future__ import annotations
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-REPO = "/root/repo"
+REPO = Path(__file__).resolve().parents[1]
 
 
 def run(label: str, cmd: list[str]) -> bool:
