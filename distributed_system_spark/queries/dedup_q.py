@@ -29,39 +29,30 @@ from distributed_system_spark.operators.dedup import (
 from distributed_system_spark.queries import register
 from distributed_system_spark.sources.tables import load_table
 
-# staging roots already scheduled for atexit cleanup (one callback per
-# root even across repeated bench/test invocations — the ann_index_
-# upsert discipline, ADVICE r8)
-_ATEXIT_ROOTS: set[str] = set()
-
-
 # Slice count K for both bounded-disk ``*_sliced`` forms; their bucket
 # key is the first two hash hex digits, so K must stay in [1, 256].
 _SLICES = 4
 
 
 def _staging_root(prefix: str, sf_dir: str, n_slices: int) -> str:
-    """Fresh per-run staging root for a sliced dedup form.
+    """Fresh staging root for ONE build of a sliced/incremental form.
 
-    Keyed by sf_dir hash + K + pid, and rmtree'd up front: slices
-    left by a prior run with a different K, by a killed process
-    (atexit never fires on SIGKILL), or by a concurrent process on
-    the same sf_dir are never silently unioned into this run's
-    result (r11 ADVICE)."""
+    A new directory per call, removed at interpreter exit: a lazy
+    frame from an earlier build keeps reading its own root after the
+    query is built again, and slices left by a prior run, a killed
+    process (atexit never fires on SIGKILL) or a concurrent process
+    are never unioned into this build's result."""
     import atexit
     import hashlib
-    import os
     import shutil
+    import tempfile
 
-    root = (
-        f"/tmp/{prefix}-"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        + f"-k{n_slices}-p{os.getpid()}"
+    root = tempfile.mkdtemp(
+        prefix=f"{prefix}-{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+        f"-k{n_slices}-",
+        dir="/tmp",
     )
-    shutil.rmtree(root, ignore_errors=True)
-    if root not in _ATEXIT_ROOTS:
-        _ATEXIT_ROOTS.add(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
 
 

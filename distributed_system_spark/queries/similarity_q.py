@@ -70,10 +70,6 @@ _SQL_SQDIST = (
 _TARGET_CELL = 64
 _MIN_CELL_BITS = 3
 
-# /tmp roots already scheduled for interpreter-exit cleanup — guards
-# against one atexit callback per invocation when bench/tests call
-# the same query repeatedly in one process.
-_ATEXIT_ROOTS: set = set()
 # Second-level split: coarse cells above _SPLIT_CAP rows are re-split
 # by up to _EXTRA_BITS additional signature planes (integer threshold
 # ladder — extra = #{j : cnt > _SPLIT_CAP * 2^j}), bounding the c²
@@ -2390,28 +2386,16 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated groupBy on ~64 cells.  Norm sums go through
     fixed-scale DECIMAL so the merge is order-insensitive
     (queries/_util.py contract)."""
-    import atexit
     import functools
-    import hashlib
-    import shutil
 
     from distributed_system_spark.concurrency import eager_all
     from distributed_system_spark.queries._util import dsum
+    from distributed_system_spark.queries.dedup_q import _staging_root
 
-    root = (
-        "/tmp/dss-annidx-"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    )
-    # Retention: the postings dir is overwritten per day-partition on
-    # every run (idempotent, never grows), and removed at interpreter
-    # exit — AFTER any action on the returned lazy frame, which still
-    # has to read it.  An inline rmtree-in-finally would delete the
-    # index before the caller's collect.  Registered once per root:
-    # repeated bench/test invocations must not stack duplicate
-    # callbacks in the interpreter (ADVICE r8).
-    if root not in _ATEXIT_ROOTS:
-        _ATEXIT_ROOTS.add(root)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    # Removed at interpreter exit, AFTER any action on the returned
+    # lazy frame, which still has to read it; a fresh root per build,
+    # so building the query again leaves an earlier frame readable.
+    root = _staging_root("dss-annidx", sf_dir, 1)
     base = _vecs(spark, sf_dir).select(
         F.col("id").alias("vec_id"), F.col("vec").alias("v")
     )

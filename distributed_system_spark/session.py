@@ -130,14 +130,33 @@ def get_spark(
     # loads by default — an env-var check alone would miss it.
     from pyspark import SparkConf
 
+    defaults = SparkConf(loadDefaults=True)
     master = master or os.environ.get("SPARK_MASTER")
-    if master:
-        builder = builder.master(master)
-    elif not (
-        SparkConf(loadDefaults=True).contains("spark.master")
+    if not master and not (
+        defaults.contains("spark.master")
         or os.environ.get("SPARK_SUBMIT_DEPLOY_MODE")
     ):
-        builder = builder.master(f"local[{par}]")
+        master = f"local[{par}]"
+    if master:
+        builder = builder.master(master)
+    # Python workers come from the engine's daemon (worker_daemon.py),
+    # which stops every task re-reading Spark's zips and jar on
+    # Python < 3.12: identity mapInPandas over 500 rows 265-375 ms ->
+    # 209-227 ms (4-core host).  The daemon runs as `python -m`, so
+    # this package's parent directory joins the workers' PYTHONPATH;
+    # without it every Python stage fails.  Local masters only, where
+    # workers share the driver's filesystem.  Both confs are read at
+    # JVM launch, so an external session (e.g. the verify driver's)
+    # keeps PySpark's stock workers.
+    if (master or defaults.get("spark.master", "")).startswith("local"):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        pythonpath = defaults.get("spark.executorEnv.PYTHONPATH", "")
+        builder = builder.config(
+            "spark.python.daemon.module", "distributed_system_spark.worker_daemon"
+        ).config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (root, pythonpath) if p),
+        )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

@@ -33,7 +33,8 @@ def count_jobs(spark):
     Runs ``fn`` in a fresh job group, then one sentinel job in a group
     of its own.  The status tracker learns of jobs from the listener
     bus, in order, so once the sentinel shows, every job ``fn``
-    started shows too."""
+    started shows too.  The sentinel runs in the JVM only, so it pays
+    no Python worker start-up."""
     import time
     import uuid
 
@@ -46,7 +47,7 @@ def count_jobs(spark):
             sc.setJobGroup(group, "count_jobs")
             fn()
             sc.setJobGroup(sentinel, "count_jobs sentinel")
-            sc.parallelize([0], 1).count()
+            spark.range(1).count()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         deadline = time.monotonic() + 30

@@ -38,20 +38,19 @@ def _toks(spark, sf_dir):
     return doc_tokens(load_table(spark, sf_dir, "documents"))
 
 
-def _expected_staging_root(prefix: str, sf_dir: str, k: int) -> str:
-    """THIS process' staging root for a sliced/incremental dedup form,
-    rebuilt from dedup_q._staging_root's documented keying (sf_dir
-    md5 + K + pid) instead of globbing /tmp — a stale root left by a
-    SIGKILLed prior run (atexit never fires) must never be the one a
-    test inspects (r12 ADVICE)."""
-    import hashlib
-    import os
+def _staging_root_of(df, prefix: str) -> str:
+    """The one staging root the lazy frame ``df`` reads, taken from its
+    input files instead of a glob of /tmp: a stale root left by a
+    SIGKILLed prior run (atexit never fires) or by an earlier build
+    must never be the one a test inspects."""
+    import re
 
-    return (
-        f"/tmp/{prefix}-"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-        + f"-k{k}-p{os.getpid()}"
-    )
+    (root,) = {
+        m.group(0)
+        for f in df.inputFiles()
+        if (m := re.search(rf"/tmp/{prefix}-[^/]+", f))
+    }
+    return root
 
 
 def test_lsh_pairs_subset_of_exact_with_high_recall(spark, sf_dir):
@@ -1509,6 +1508,19 @@ def test_sliced_forms_equal_one_shot_awkward_k(spark, k, monkeypatch):
         assert b.exceptAll(a).count() == 0, (one_shot, sliced, k)
 
 
+@pytest.mark.parametrize("name", ["contamination_incr", "ann_index_upsert"])
+def test_rebuilt_staged_query_keeps_earlier_frame_readable(spark, sf_dir, name):
+    """Each build of a staged form gets its own staging root: building
+    the query again must not delete or overwrite the pieces the first,
+    still lazy, frame reads."""
+    from distributed_system_spark.queries import load_all
+
+    fn = load_all()[name].fn
+    first = fn(spark, sf_dir)
+    n = fn(spark, sf_dir).count()
+    assert first.count() == n
+
+
 def test_substring_incr_equals_one_shot_restricted(spark):
     """The standing-index substring form (r11 verdict item #6) must
     equal the from-scratch chain report restricted to the new docs
@@ -1524,10 +1536,10 @@ def test_substring_incr_equals_one_shot_restricted(spark):
     b = reg["dedup_substring_chains_incr"].fn(spark, sf)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
-    # THIS run's staging root, built from _staging_root's own keying
-    # (sf md5 + K + pid) — a glob could pick up a stale root left by
-    # a SIGKILLed prior process, whose atexit never fired (r12 ADVICE)
-    root = _expected_staging_root("dss-substr-incr", sf, 1)
+    # THIS build's staging root, read off the frame — a glob could
+    # pick up a stale root left by a SIGKILLed prior process, whose
+    # atexit never fired (r12 ADVICE)
+    root = _staging_root_of(b, "dss-substr-incr")
     staged = spark.read.parquet(f"{root}/pos")
     assert staged.filter("doc_id < 400").count() == 0
 
@@ -1548,9 +1560,9 @@ def test_contamination_incr_equals_one_shot(spark):
     b = reg["contamination_incr"].fn(spark, sf)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
-    # deterministic root (not a glob) — see
+    # this build's root (not a glob) — see
     # test_substring_incr_equals_one_shot_restricted
-    root = _expected_staging_root("dss-contam-incr", sf, 1)
+    root = _staging_root_of(b, "dss-contam-incr")
     eval_docs = {
         r["test_doc"]
         for r in spark.read.parquet(f"{root}/eval_index")
@@ -1603,7 +1615,7 @@ def test_contamination_incr_multicut_and_dropped_grams(spark, monkeypatch):
     b = reg["contamination_incr"].fn(spark, sf)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
-    root = _expected_staging_root("dss-contam-incr", sf, 1)
+    root = _staging_root_of(b, "dss-contam-incr")
     assert sorted(os.listdir(f"{root}/freq")) == [
         f"day={d}" for d in "1234"
     ]
