@@ -33,6 +33,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from distributed_system_spark.queries import load_all  # noqa: E402
+from distributed_system_spark.scratch import fresh_dir  # noqa: E402
 from distributed_system_spark.session import get_spark  # noqa: E402
 
 # Warm best-of-N per query.  r11->r12: single-shot timing let a broad
@@ -379,22 +380,16 @@ def _bench_sf1_subset(
     and foreign SF dirs skip it)."""
     if not full_run or sf != 0.1:
         return
-    import atexit
-    import shutil
-
     here = os.path.dirname(os.path.abspath(__file__))
     sys.path.insert(0, os.path.join(here, "tools"))
     try:
         import scaleup
     except Exception:
         return
-    root = f"/tmp/dss-bench-sf1-p{os.getpid()}"
-    shutil.rmtree(root, ignore_errors=True)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = fresh_dir("bench-sf1")
     try:
         scaleup.build(root, "sf1", src=sf_dir)
     except Exception:
-        shutil.rmtree(root, ignore_errors=True)
         return
     sf1_dir = os.path.join(root, "sf1")
     sf1_times = {
@@ -402,7 +397,6 @@ def _bench_sf1_subset(
         for name in SF1_SUBSET
         if name in registry
     }
-    shutil.rmtree(root, ignore_errors=True)
     # Its own line, printed BEFORE the contract line: the driver
     # keeps the last 2000 chars of output, so folding ~290 chars of
     # sf1 entries into the contract JSON would push IT past the

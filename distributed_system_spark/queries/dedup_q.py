@@ -27,33 +27,12 @@ from distributed_system_spark.operators.dedup import (
     token_set_keyed,
 )
 from distributed_system_spark.queries import register
+from distributed_system_spark.scratch import fresh_dir
 from distributed_system_spark.sources.tables import load_table
 
 # Slice count K for both bounded-disk ``*_sliced`` forms; their bucket
 # key is the first two hash hex digits, so K must stay in [1, 256].
 _SLICES = 4
-
-
-def _staging_root(prefix: str, sf_dir: str, n_slices: int) -> str:
-    """Fresh staging root for ONE build of a sliced/incremental form.
-
-    A new directory per call, removed at interpreter exit: a lazy
-    frame from an earlier build keeps reading its own root after the
-    query is built again, and slices left by a prior run, a killed
-    process (atexit never fires on SIGKILL) or a concurrent process
-    are never unioned into this build's result."""
-    import atexit
-    import hashlib
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(
-        prefix=f"{prefix}-{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-        f"-k{n_slices}-",
-        dir="/tmp",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
 
 
 _TOKS_SQL = """
@@ -2735,7 +2714,7 @@ def dedup_substring_chains_sliced(
     bucket 0 double-width, measured as a 2/16-of-the-space spill
     spike at sf1000d)."""
     n_slices = _SLICES
-    root = _staging_root("dss-substr-sliced", sf_dir, n_slices)
+    root = fresh_dir("substr-sliced")
     # Stage the planted corpus ONCE: the corpus build is a full-corpus
     # self-join whose sort spill is a ~35 GB scratch CONSTANT at the
     # fifth decade — paid per slice, it erases the slicing's whole
@@ -2822,7 +2801,7 @@ def dedup_substring_chains_incr(
     from distributed_system_spark.concurrency import eager_all
 
     docs = load_table(spark, sf_dir, "documents")
-    root = _staging_root("dss-substr-incr", sf_dir, 1)
+    root = fresh_dir("substr-incr")
     # The planted-quote corpus is the shared test fixture — built over
     # the union (the oracle does the same), STAGED ONCE (its self-join
     # would otherwise re-run per batch — the sliced form's lesson),
@@ -3300,7 +3279,7 @@ def dedup_incremental_capped_sliced(
     this is the form that finishes the fifth decade on one machine."""
     docs = load_table(spark, sf_dir, "documents")
     n_slices = _SLICES
-    root = _staging_root("dss-cappedsl", sf_dir, n_slices)
+    root = fresh_dir("cappedsl")
     # ONE corpus scan for stage 0 (r13): the keyed set table stages
     # first, then the band table derives from the STAGED ts arrays
     # (min over distinct tokens ≡ min over tokens, twin-tested) — the

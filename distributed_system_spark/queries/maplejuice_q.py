@@ -24,6 +24,7 @@ from distributed_system_spark.operators.maplejuice import (
 )
 from distributed_system_spark.queries import register
 from distributed_system_spark.queries.wordcount_q import WORDCOUNT_ORACLE
+from distributed_system_spark.scratch import fresh_dir
 from distributed_system_spark.sources.tables import (
     WIDEN_SLOT_BYTES_DENSE,
     load_table,
@@ -147,8 +148,6 @@ def kv_format_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity; parallelism scales with piece count and the writer's
     temp+rename publish keeps failed tasks invisible (A5).
     """
-    import hashlib
-
     from distributed_system_spark.sources.kv_datasource import (
         register_kv_datasource,
     )
@@ -159,8 +158,8 @@ def kv_format_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split("text", " ", -1)).alias("key"),
         F.col("doc_id").cast("string").alias("value"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = f"/tmp/dss-kvds-{tag}"
+    # a fresh dir per build: the returned lazy frame reads it
+    path = fresh_dir("kvds")
     kv.repartition(8).write.format("kvpieces").mode("overwrite").option(
         "path", path
     ).save()

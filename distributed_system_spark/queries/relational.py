@@ -22,7 +22,8 @@ from distributed_system_spark.queries._util import (
     sql_dround,
     sql_dsum,
 )
-from distributed_system_spark.sources.tables import load_table
+from distributed_system_spark.scratch import keyed_dir
+from distributed_system_spark.sources.tables import load_table, table_path
 
 
 # --- C2: projection + filter (conjunctive + range + LIKE) -----------------
@@ -618,31 +619,13 @@ def multi_format_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     with explicit schemas and joined — the result must equal the
     parquet-only oracle.  Explicit schemas matter at scale: schema
     inference is a full extra pass over 100 TB."""
-    import hashlib
     import os
 
-    # Cache key includes the source parquet's (path, mtime, size): if
-    # the fixture is regenerated in place the stale staged CSV/JSON is
-    # abandoned instead of silently reused (it would diverge from the
-    # parquet-only oracle).
-    def _stat_sig(table: str) -> str:
-        p = os.path.join(sf_dir, f"{table}.parquet")
-        paths = (
-            sorted(
-                os.path.join(p, f) for f in os.listdir(p) if not f.startswith(".")
-            )
-            if os.path.isdir(p)
-            else [p]
-        )
-        return ";".join(
-            f"{q}:{int(os.path.getmtime(q))}:{os.path.getsize(q)}"
-            for q in paths
-            if os.path.exists(q)
-        )
-
-    key = f"{sf_dir}:formats:{_stat_sig('region')}|{_stat_sig('nation')}"
-    tag = hashlib.md5(key.encode()).hexdigest()[:12]
-    stage = f"/tmp/dss-formats-{tag}"
+    stage = keyed_dir(
+        "formats",
+        table_path(sf_dir, "region"),
+        table_path(sf_dir, "nation"),
+    )
     region_csv = f"{stage}/region_csv"
     nation_json = f"{stage}/nation_json"
     if not os.path.exists(f"{stage}/_DONE"):
@@ -1037,26 +1020,9 @@ def orc_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision that matters most at 100 TB: a status-partitioned sink
     turns a full scan into a 1-of-3 directory read.  Same staging/
     cache-key discipline as multi_format_scan."""
-    import hashlib
     import os
 
-    p = os.path.join(sf_dir, "orders.parquet")
-    paths = (
-        sorted(
-            os.path.join(p, f)
-            for f in os.listdir(p)
-            if not f.startswith(".")
-        )
-        if os.path.isdir(p)
-        else [p]
-    )
-    sig = ";".join(
-        f"{q}:{int(os.path.getmtime(q))}:{os.path.getsize(q)}"
-        for q in paths
-        if os.path.exists(q)
-    )
-    tag = hashlib.md5(f"{sf_dir}:orc:{sig}".encode()).hexdigest()[:12]
-    stage = f"/tmp/dss-orc-{tag}/orders_orc"
+    stage = f"{keyed_dir('orc', table_path(sf_dir, 'orders'))}/orders_orc"
     if not os.path.exists(f"{stage}/_SUCCESS"):
         load_table(spark, sf_dir, "orders").write.mode(
             "overwrite"

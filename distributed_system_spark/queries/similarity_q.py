@@ -28,6 +28,7 @@ from distributed_system_spark.operators.similarity import (
     vec_double,
 )
 from distributed_system_spark.queries import register
+from distributed_system_spark.scratch import fresh_dir
 from distributed_system_spark.sources.tables import (
     WIDEN_SLOT_BYTES_DENSE,
     load_table,
@@ -2390,12 +2391,10 @@ def ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from distributed_system_spark.concurrency import eager_all
     from distributed_system_spark.queries._util import dsum
-    from distributed_system_spark.queries.dedup_q import _staging_root
 
-    # Removed at interpreter exit, AFTER any action on the returned
-    # lazy frame, which still has to read it; a fresh root per build,
-    # so building the query again leaves an earlier frame readable.
-    root = _staging_root("dss-annidx", sf_dir, 1)
+    # a fresh root per build, so building the query again leaves an
+    # earlier lazy frame readable
+    root = fresh_dir("annidx")
     base = _vecs(spark, sf_dir).select(
         F.col("id").alias("vec_id"), F.col("vec").alias("v")
     )

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from distributed_system_spark.queries import register
+from distributed_system_spark.scratch import fresh_dir
 from distributed_system_spark.sources.tables import (
     WIDEN_SLOT_BYTES_DENSE,
     load_table,
@@ -656,7 +657,6 @@ def contamination_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     import functools
 
     from distributed_system_spark.concurrency import eager_all
-    from distributed_system_spark.queries.dedup_q import _staging_root
 
     docs = load_table(spark, sf_dir, "documents")
     b = F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 2)
@@ -664,7 +664,7 @@ def contamination_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id", split.alias("split"), F.split("text", " ", -1).alias("toks")
     )
-    root = _staging_root("dss-contam-incr", sf_dir, 1)
+    root = fresh_dir("contam-incr")
     base.filter(F.col("split") == "test").select(
         F.col("doc_id").alias("test_doc"),
         F.explode(_distinct_8grams()).alias("h"),

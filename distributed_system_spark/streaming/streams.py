@@ -26,7 +26,11 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-from distributed_system_spark.sources.tables import canonical_event_time
+from distributed_system_spark.scratch import keyed_dir
+from distributed_system_spark.sources.tables import (
+    canonical_event_time,
+    table_path,
+)
 
 # The driver's events.parquet stores ts as TIMESTAMP(MICROS,
 # isAdjustedToUTC=false) → timestamp_ntz; streams need the schema up
@@ -41,19 +45,6 @@ EVENTS_SCHEMA = StructType(
         StructField("props", StringType()),
     ]
 )
-
-
-def _src_tag(src: str, extra: str = "") -> str:
-    """Staging-dir cache key covering the source file's identity AND
-    its stats — a driver-side regeneration of the testdata must never
-    be served from a stale /tmp staging copy. mtime at nanosecond
-    precision: a same-second, same-size regeneration still misses."""
-    import hashlib
-    import os
-
-    st = os.stat(src)
-    key = f"{src}:{st.st_mtime_ns}:{st.st_size}:{extra}"
-    return hashlib.md5(key.encode()).hexdigest()[:12]
 
 
 def events_stream_schema(src: str) -> StructType:
@@ -102,12 +93,11 @@ def _index_exists(spark: SparkSession, path: str) -> bool:
 def _stage_dir(sf_dir: str) -> str:
     """The file-stream source watches a DIRECTORY (files arriving in
     it are the A19 events), but the driver ships events as one file —
-    so symlink it into a per-sf staging dir under /tmp."""
+    so symlink it into a per-source staging dir."""
     import os
 
     src = f"{sf_dir.rstrip('/')}/events.parquet"
-    stage = f"/tmp/dss-events-stream-{_src_tag(src)}"
-    os.makedirs(stage, exist_ok=True)
+    stage = keyed_dir("events-stream", src)
     link = os.path.join(stage, "events-000.parquet")
     if not os.path.exists(link):
         os.symlink(src, link)
@@ -197,15 +187,17 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     return src.dropDuplicates(["event_id"])
 
 
-def _multibatch_stage_dir(spark: SparkSession, sf_dir: str, n: int = 3) -> str:
-    """Stage the events table as ``n`` parquet files so a
+def _multibatch_stage_dir(
+    spark: SparkSession, sf_dir: str, table: str = "events", n: int = 3
+) -> str:
+    """Stage ``table`` as ``n`` parquet files so a
     maxFilesPerTrigger=1 stream replays it as ``n`` microbatches —
     the multi-batch arrival pattern that actually exercises state
     carry-over (one symlinked file would collapse to a single batch)."""
     import os
 
-    src = f"{sf_dir.rstrip('/')}/events.parquet"
-    stage = f"/tmp/dss-events-multibatch-{_src_tag(src, str(n))}"
+    src = table_path(sf_dir, table)
+    stage = keyed_dir(f"{table}-multibatch", src, extra=str(n))
     if not os.path.exists(os.path.join(stage, "_SUCCESS")):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         (
@@ -413,10 +405,9 @@ def _timeordered_stage_dir(sf_dir: str, n: int = 3) -> str:
     import pyarrow.parquet as pq
 
     src = f"{sf_dir.rstrip('/')}/events.parquet"
-    stage = f"/tmp/dss-events-ordered-{_src_tag(src, f'ordered:{n}')}"
+    stage = keyed_dir("events-ordered", src, extra=str(n))
     if os.path.exists(os.path.join(stage, "_DONE")):
         return stage
-    os.makedirs(stage, exist_ok=True)
     t = pq.read_table(src)
     ts_col = t["ts"]
     if getattr(ts_col.type, "unit", None) == "ns":
@@ -643,23 +634,6 @@ DOCS_SCHEMA = StructType(
 )
 
 
-def _docs_stage_dir(spark: SparkSession, sf_dir: str, n: int = 3) -> str:
-    """Stage documents as ``n`` parquet files for a multi-microbatch
-    replay (same pattern as `_multibatch_stage_dir`)."""
-    import os
-
-    src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    stage = f"/tmp/dss-docs-multibatch-{_src_tag(src, str(n))}"
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        (
-            spark.read.parquet(src)
-            .repartition(n)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-    return stage
-
-
 def docs_quality_gate_stream(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -674,13 +648,13 @@ def docs_quality_gate_stream(
     import os
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    root = f"/tmp/dss-docs-gate-{_src_tag(src)}"
+    root = keyed_dir("docs-gate", src)
     out_dir, ckpt = os.path.join(root, "out"), os.path.join(root, "ckpt")
 
     raw = (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_docs_stage_dir(spark, sf_dir))
+        .parquet(_multibatch_stage_dir(spark, sf_dir, "documents"))
     )
     t = F.split("text", " ", -1)
     gated = raw.select(
@@ -716,10 +690,9 @@ def _docs_idordered_stage_dir(sf_dir: str, n: int = 3) -> str:
     import pyarrow.parquet as pq
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    stage = f"/tmp/dss-docs-idordered-{_src_tag(src, f'ids:{n}')}"
+    stage = keyed_dir("docs-idordered", src, extra=str(n))
     if os.path.exists(os.path.join(stage, "_DONE")):
         return stage
-    os.makedirs(stage, exist_ok=True)
     t = pq.read_table(src).sort_by("doc_id")
     step = (t.num_rows + n - 1) // n
     base = 1_700_000_000
@@ -762,7 +735,7 @@ def signature_index_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    root = f"/tmp/dss-sigidx-{_src_tag(src)}"
+    root = keyed_dir("sigidx", src)
     out_dir = os.path.join(root, "out")
     bands_dir = os.path.join(root, "index_bands")
     toks_dir = os.path.join(root, "index_toks")
@@ -895,7 +868,7 @@ def phash_signature_index_stream(
     )
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    root = f"/tmp/dss-phashidx-{_src_tag(src)}"
+    root = keyed_dir("phashidx", src)
     out_dir = os.path.join(root, "out")
     idx_dir = os.path.join(root, "index_sigs")
     ckpt = os.path.join(root, "ckpt")
@@ -1033,7 +1006,7 @@ def substring_freq_index_stream(
     import os
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    root = f"/tmp/dss-substrfreq-{_src_tag(src, f'nb:{n_batches}')}"
+    root = keyed_dir("substrfreq", src, extra=str(n_batches))
     out_dir = os.path.join(root, "out")
     freq_dir = os.path.join(root, "index_freq")
     ckpt = os.path.join(root, "ckpt")
@@ -1220,7 +1193,7 @@ def contamination_index_stream(
     from distributed_system_spark.queries.text_q import _distinct_8grams
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    root = f"/tmp/dss-contamstream-{_src_tag(src)}"
+    root = keyed_dir("contamstream", src)
     eval_dir = os.path.join(root, "eval_index")
     freq_dir = os.path.join(root, "freq")
     hits_dir = os.path.join(root, "hits")
@@ -1437,13 +1410,13 @@ def drift_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    root = f"/tmp/dss-drift-monitor-{_src_tag(src)}"
+    root = keyed_dir("drift-monitor", src)
     out_dir, ckpt = os.path.join(root, "out"), os.path.join(root, "ckpt")
 
     raw = (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_docs_stage_dir(spark, sf_dir))
+        .parquet(_multibatch_stage_dir(spark, sf_dir, "documents"))
     )
     # The bin/split assignment is IMPORTED from drift_q (not
     # re-hardcoded) so a change to the batch drift_psi can never
@@ -1506,7 +1479,7 @@ def cusum_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = f"{sf_dir.rstrip('/')}/events.parquet"
-    root = f"/tmp/dss-cusum-monitor-{_src_tag(src)}"
+    root = keyed_dir("cusum-monitor", src)
     out_dir, ckpt = os.path.join(root, "out"), os.path.join(root, "ckpt")
 
     # EVENTS_SCHEMA (TimestampNTZ ts), NOT events_stream_schema(src):
@@ -1569,14 +1542,14 @@ def cms_monitor_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    root = f"/tmp/dss-cms-monitor-{_src_tag(src)}"
+    root = keyed_dir("cms-monitor", src)
     out_dir, ckpt = os.path.join(root, "out"), os.path.join(root, "ckpt")
     watch_dir = os.path.join(root, "watch")
 
     raw = (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_docs_stage_dir(spark, sf_dir))
+        .parquet(_multibatch_stage_dir(spark, sf_dir, "documents"))
     )
     toks = raw.select(
         F.explode(F.split("text", " ", -1)).alias("tok")
@@ -1713,7 +1686,7 @@ def decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    root = f"/tmp/dss-decontam-{_src_tag(src)}"
+    root = keyed_dir("decontam", src)
     out_dir, ckpt = os.path.join(root, "out"), os.path.join(root, "ckpt")
 
     b = F.substring(
@@ -1774,7 +1747,7 @@ def decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = (
         spark.readStream.schema(DOCS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_docs_stage_dir(spark, sf_dir))
+        .parquet(_multibatch_stage_dir(spark, sf_dir, "documents"))
     )
     q = (
         raw.writeStream.foreachBatch(apply_batch)
@@ -1826,10 +1799,7 @@ def token_budget_stream(
     import os
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    tag = _src_tag(src) if budget == 20000 else _src_tag(
-        src, f"b:{budget}"
-    )
-    root = f"/tmp/dss-tokbudget-{tag}"
+    root = keyed_dir("tokbudget", src, extra=str(budget))
     out_dir = os.path.join(root, "out")
     totals_dir = os.path.join(root, "totals")
     ckpt = os.path.join(root, "ckpt")
@@ -1933,15 +1903,9 @@ def domain_quota_stream(
     import os
 
     src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    tag = (
-        _src_tag(src)
-        if (domain_cap, global_budget) == (800, 10000)
-        else _src_tag(src, f"dq:{domain_cap}:{global_budget}")
+    root = keyed_dir(
+        "domquota", src, extra=f"{domain_cap}:{global_budget}"
     )
-    # "2" suffix: the totals schema grew a dom_arrived column when the
-    # global meter switched from admitted to level-1-survivor tokens —
-    # never read a stale 3-column state dir from the old layout.
-    root = f"/tmp/dss-domquota2-{tag}"
     out_dir = os.path.join(root, "out")
     totals_dir = os.path.join(root, "totals")
     ckpt = os.path.join(root, "ckpt")

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from distributed_system_spark import scratch
 from distributed_system_spark.operators.dedup import (
     doc_tokens,
     jaccard_verify,
@@ -40,15 +41,16 @@ def _toks(spark, sf_dir):
 
 def _staging_root_of(df, prefix: str) -> str:
     """The one staging root the lazy frame ``df`` reads, taken from its
-    input files instead of a glob of /tmp: a stale root left by a
-    SIGKILLed prior run (atexit never fires) or by an earlier build
-    must never be the one a test inspects."""
+    input files instead of a glob of this process's scratch root: a
+    root left by an earlier build must never be the one a test
+    inspects."""
     import re
 
+    here = re.escape(scratch.root())
     (root,) = {
         m.group(0)
         for f in df.inputFiles()
-        if (m := re.search(rf"/tmp/{prefix}-[^/]+", f))
+        if (m := re.search(rf"{here}/{prefix}-[^/]+", f))
     }
     return root
 
@@ -1508,7 +1510,9 @@ def test_sliced_forms_equal_one_shot_awkward_k(spark, k, monkeypatch):
         assert b.exceptAll(a).count() == 0, (one_shot, sliced, k)
 
 
-@pytest.mark.parametrize("name", ["contamination_incr", "ann_index_upsert"])
+@pytest.mark.parametrize(
+    "name", ["contamination_incr", "ann_index_upsert", "kv_format_scan"]
+)
 def test_rebuilt_staged_query_keeps_earlier_frame_readable(spark, sf_dir, name):
     """Each build of a staged form gets its own staging root: building
     the query again must not delete or overwrite the pieces the first,
@@ -1517,7 +1521,8 @@ def test_rebuilt_staged_query_keeps_earlier_frame_readable(spark, sf_dir, name):
 
     fn = load_all()[name].fn
     first = fn(spark, sf_dir)
-    n = fn(spark, sf_dir).count()
+    n = first.count()  # plans the frame's reads before the rebuild
+    assert fn(spark, sf_dir).count() == n
     assert first.count() == n
 
 
@@ -1537,9 +1542,8 @@ def test_substring_incr_equals_one_shot_restricted(spark):
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     # THIS build's staging root, read off the frame — a glob could
-    # pick up a stale root left by a SIGKILLed prior process, whose
-    # atexit never fired (r12 ADVICE)
-    root = _staging_root_of(b, "dss-substr-incr")
+    # pick up the root of an earlier build in this process
+    root = _staging_root_of(b, "substr-incr")
     staged = spark.read.parquet(f"{root}/pos")
     assert staged.filter("doc_id < 400").count() == 0
 
@@ -1562,7 +1566,7 @@ def test_contamination_incr_equals_one_shot(spark):
     assert b.exceptAll(a).count() == 0
     # this build's root (not a glob) — see
     # test_substring_incr_equals_one_shot_restricted
-    root = _staging_root_of(b, "dss-contam-incr")
+    root = _staging_root_of(b, "contam-incr")
     eval_docs = {
         r["test_doc"]
         for r in spark.read.parquet(f"{root}/eval_index")
@@ -1615,7 +1619,7 @@ def test_contamination_incr_multicut_and_dropped_grams(spark, monkeypatch):
     b = reg["contamination_incr"].fn(spark, sf)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
-    root = _staging_root_of(b, "dss-contam-incr")
+    root = _staging_root_of(b, "contam-incr")
     assert sorted(os.listdir(f"{root}/freq")) == [
         f"day={d}" for d in "1234"
     ]

@@ -19,6 +19,7 @@ import re
 
 import pytest
 
+from distributed_system_spark import scratch
 from distributed_system_spark.queries import load_all
 
 REGISTRY = load_all()
@@ -840,10 +841,11 @@ def test_prep_pipeline_plan_shape(spark, sf_dir):
 def test_ann_index_upsert_incremental_plan(spark, sf_dir):
     """Index maintenance must read the MERGED postings parquet for its
     stats (not recompute assignment over history): the returned plan
-    scans the /tmp index files, contains no cartesian, and aggregates
-    ~64 cells with a partial (map-side) phase before the exchange."""
+    scans the index files in the scratch root, contains no cartesian,
+    and aggregates ~64 cells with a partial (map-side) phase before
+    the exchange."""
     plan = plan_of(spark, sf_dir, "ann_index_upsert")
-    assert "dss-annidx-" in plan, plan
+    assert f"{scratch.root()}/annidx-" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "partial" in plan.lower(), plan
 

@@ -5,6 +5,8 @@ fingerprints it reads."""
 from __future__ import annotations
 
 import json
+import subprocess
+import sys
 from pathlib import Path
 
 from distributed_system_spark.queries import (
@@ -24,6 +26,7 @@ NO_ORACLE = dict(rows_match=None, schema_match=None, hash_match=None,
 HASH_MISMATCH = {**GREEN, "hash_match": False}
 CRASHED = {**NO_ORACLE, "err": "Traceback ..."}
 
+_REPO = Path(__file__).resolve().parents[1]
 load_all()  # fill REGISTRY
 ROUND_ROBIN = list(_interleaved(REGISTRY))
 
@@ -104,15 +107,37 @@ def test_real_tree_window_holds_the_least_recently_verified():
     assert max(inside) <= min(outside)
 
 
-def test_fingerprints_are_fresh(spark, sf_dir):
+# a new process, as `tools/explain.py --fingerprints` runs: a stream
+# query's first build in a process runs its batches, whose checkpoint
+# plans are part of its fingerprint, and a later build replays none
+_FINGERPRINTS = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from distributed_system_spark.session import get_spark
+from tools.explain import fingerprints
+spark = get_spark("pytest", master="local[4]", shuffle_partitions=8)
+print("FINGERPRINTS", json.dumps(fingerprints(spark, sys.argv[2])))
+spark.stop()
+"""
+
+
+def test_fingerprints_are_fresh(sf_dir):
     """Every committed plan fingerprint matches the query's current
     plans, so a plan change cannot skip the verification window."""
-    from tools.explain import fingerprints
-
     committed = {
         n: fp for n, (fp, _) in json.loads(FINGERPRINTS.read_text()).items()
     }
-    got = fingerprints(spark, sf_dir)
+    out = subprocess.run(
+        [sys.executable, "-c", _FINGERPRINTS, str(_REPO), sf_dir],
+        capture_output=True,
+        text=True,
+        timeout=1800,
+    )
+    lines = [
+        ln for ln in out.stdout.splitlines() if ln.startswith("FINGERPRINTS ")
+    ]
+    assert lines, out.stdout + out.stderr[-4000:]
+    got = json.loads(lines[0].removeprefix("FINGERPRINTS "))
     stale = sorted(
         n for n in got.keys() | committed.keys() if got.get(n) != committed.get(n)
     )

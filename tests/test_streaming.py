@@ -9,6 +9,7 @@ import time
 import pyspark.sql.functions as F
 import pytest
 
+from distributed_system_spark.scratch import keyed_dir
 from distributed_system_spark.sources.tables import load_table
 from distributed_system_spark.streaming import (
     ConfigWatcher,
@@ -664,7 +665,6 @@ def test_signature_index_stream_incremental_and_idempotent(spark, sf_dir):
         minhash_signatures,
     )
     from distributed_system_spark.streaming.streams import (
-        _src_tag,
         signature_index_stream,
     )
 
@@ -690,9 +690,7 @@ def test_signature_index_stream_incremental_and_idempotent(spark, sf_dir):
         for r in signature_index_stream(spark, sf_dir).collect()
     }
     assert got2 == got1
-    root = (
-        f"/tmp/dss-sigidx-{_src_tag(f'{sf_dir}/documents.parquet')}"
-    )
+    root = keyed_dir("sigidx", f"{sf_dir}/documents.parquet")
     pieces = [
         d
         for d in os.listdir(os.path.join(root, "index_bands"))
@@ -744,7 +742,6 @@ def test_phash_index_stream_incremental_and_idempotent(spark, sf_dir):
         ppm_payloads,
     )
     from distributed_system_spark.streaming.streams import (
-        _src_tag,
         phash_signature_index_stream,
     )
 
@@ -776,7 +773,7 @@ def test_phash_index_stream_incremental_and_idempotent(spark, sf_dir):
         for r in phash_signature_index_stream(spark, sf_dir).collect()
     }
     assert got2 == got1
-    root = f"/tmp/dss-phashidx-{_src_tag(f'{sf_dir}/documents.parquet')}"
+    root = keyed_dir("phashidx", f"{sf_dir}/documents.parquet")
     pieces = [
         d
         for d in os.listdir(os.path.join(root, "index_sigs"))
@@ -977,7 +974,6 @@ def test_token_budget_stream_replay_idempotent(spark, sf_dir):
     import shutil
 
     from distributed_system_spark.streaming.streams import (
-        _src_tag,
         token_budget_stream,
     )
 
@@ -1013,8 +1009,8 @@ def test_token_budget_stream_replay_idempotent(spark, sf_dir):
     budget = int(prior01 + (tot - prior01) // 2)
     assert prior01 < budget < tot, (src_name, prior01, budget, tot)
 
-    root = f"/tmp/dss-tokbudget-" + _src_tag(
-        f"{sf_dir}/documents.parquet", f"b:{budget}"
+    root = keyed_dir(
+        "tokbudget", f"{sf_dir}/documents.parquet", extra=str(budget)
     )
     shutil.rmtree(root, ignore_errors=True)
     got1 = {
@@ -1061,7 +1057,6 @@ def test_domain_quota_stream_replay_idempotent(spark, sf_dir):
     import shutil
 
     from distributed_system_spark.streaming.streams import (
-        _src_tag,
         domain_quota_stream,
     )
 
@@ -1080,8 +1075,8 @@ def test_domain_quota_stream_replay_idempotent(spark, sf_dir):
     budget = int(prior01 + (tot - prior01) // 2)
     assert prior01 < budget < tot
 
-    root = "/tmp/dss-domquota2-" + _src_tag(
-        f"{sf_dir}/documents.parquet", f"dq:{dcap}:{budget}"
+    root = keyed_dir(
+        "domquota", f"{sf_dir}/documents.parquet", extra=f"{dcap}:{budget}"
     )
     shutil.rmtree(root, ignore_errors=True)
     got1 = {
@@ -1118,7 +1113,6 @@ def test_domain_quota_stream_budget_binds_early(spark, sf_dir):
     import shutil
 
     from distributed_system_spark.streaming.streams import (
-        _src_tag,
         domain_quota_stream,
     )
 
@@ -1159,8 +1153,8 @@ def test_domain_quota_stream_budget_binds_early(spark, sf_dir):
             expect.add((r.doc_id, r.source, r.n))
     assert expect and len(expect) < len(dom)
 
-    root = "/tmp/dss-domquota2-" + _src_tag(
-        f"{sf_dir}/documents.parquet", f"dq:{dcap}:{budget}"
+    root = keyed_dir(
+        "domquota", f"{sf_dir}/documents.parquet", extra=f"{dcap}:{budget}"
     )
     shutil.rmtree(root, ignore_errors=True)
     got = {
@@ -1202,7 +1196,6 @@ def test_substr_freq_index_stream_incremental_and_idempotent(
     import os
 
     from distributed_system_spark.streaming.streams import (
-        _src_tag,
         substring_freq_index_stream,
     )
 
@@ -1214,10 +1207,7 @@ def test_substr_freq_index_stream_incremental_and_idempotent(
         tuple(r) for r in substring_freq_index_stream(spark, sf_dir).collect()
     }
     assert got2 == got1
-    root = (
-        f"/tmp/dss-substrfreq-"
-        f"{_src_tag(f'{sf_dir}/documents.parquet', 'nb:3')}"
-    )
+    root = keyed_dir("substrfreq", f"{sf_dir}/documents.parquet", extra="3")
     pieces = sorted(
         d
         for d in os.listdir(os.path.join(root, "index_freq"))
@@ -1264,7 +1254,6 @@ def test_contam_index_stream_incremental_and_idempotent(spark, sf_dir):
 
     from distributed_system_spark.queries import load_all
     from distributed_system_spark.streaming.streams import (
-        _src_tag,
         contamination_index_stream,
     )
 
@@ -1277,9 +1266,7 @@ def test_contam_index_stream_incremental_and_idempotent(spark, sf_dir):
         for r in load_all()["contamination_check"].fn(spark, sf_dir).collect()
     }
     assert got1 == want
-    root = (
-        f"/tmp/dss-contamstream-{_src_tag(f'{sf_dir}/documents.parquet')}"
-    )
+    root = keyed_dir("contamstream", f"{sf_dir}/documents.parquet")
     eval_mtime = max(
         os.path.getmtime(os.path.join(root, "eval_index", f))
         for f in os.listdir(os.path.join(root, "eval_index"))
