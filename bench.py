@@ -1,26 +1,23 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
 (default sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": ..., "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ...}
+Prints two JSON lines on a full run, the sf1 line first:
+  {"sf1_cpus": n, "sf1_times": [sec, ...], "sf1_total": sec}
+  {"metric": ..., "unit": "sec", "best_of": 2, "sf": ...,
+   "queries": {name: sec, ...}, "value": total_sec}
+``sf1_times`` follows ``SF1_SUBSET`` order.  Times are rounded to
+2 decimals and ``value`` is the sum of the printed times.  An --only
+run, or a run at any sf other than 0.1, prints the contract line
+alone.  Round-to-round deltas come from consecutive records'
+``queries`` maps; the harness does not compare against them.
 
 Each query is executed with a noop sink (computes every output
 column, excludes sink cost) after one warmup action to absorb JVM/
-codegen startup.
+codegen startup, and timed warm best-of-2.
 
 Usage:
   python bench.py                 # full HEADLINE list
   python bench.py --only NAME...  # subset (iterating on one query)
-
-Self-adjudicating regressions: any query whose wall exceeds 1.5x its
-prior-round time is re-timed once in the same warm process and the
-BEST of the two runs is reported (with both walls under "retimes").
-A machine-contention spike passes the second run; a real code
-regression fails both — so the "regressions" list no longer needs a
-manual idle-machine adjudication cycle (it cost one in round 8:
-drift_psi and hard_negative_mining flagged at 1.8x under leftover
-load, both judged noise from isolated re-times).
 """
 
 from __future__ import annotations
@@ -29,19 +26,20 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from distributed_system_spark.queries import load_all  # noqa: E402
 from distributed_system_spark.scratch import fresh_dir  # noqa: E402
-from distributed_system_spark.session import get_spark  # noqa: E402
+from distributed_system_spark.session import (  # noqa: E402
+    drop_persisted,
+    get_spark,
+)
 
-# Warm best-of-N per query.  r11->r12: single-shot timing let a broad
-# ~9-25% machine/JVM band drift 52 of 55 queries with no code cause
-# (r11 verdict item #2); the second pass costs ~2 min of bench wall and
-# removes the band from round-over-round comparisons.  First round
-# reported with best_of=2: r12 (the JSON carries "best_of" so
-# histories compare like with like).
+# Warm best-of-N per query: single-shot timing let a ~9-25% machine/
+# JVM band drift 52 of 55 queries with no code cause; the second pass
+# removes that band from round-over-round comparisons.
 BEST_OF = 2
 
 HEADLINE = [
@@ -52,10 +50,7 @@ HEADLINE = [
     "q5_local_supplier_volume",  # 6-table join (TPC-H Q5 shape)
     "q10_returned_items", # selective join + agg + top-k (TPC-H Q10 shape)
     "q6_revenue_forecast",  # pure scan+filter+agg (TPC-H Q6 shape, IO-bound)
-    "q9_product_profit",  # 5-table join, profit rollup (TPC-H Q9
-                          # shape).  r12 adjudication (2026-08-16) of
-                          # the r11 1.40x flag: warm best-of-3 0.812 s
-                          # — noise, untouched code
+    "q9_product_profit",  # 5-table join, profit rollup (TPC-H Q9 shape)
     "q18_large_volume",   # HAVING over grouped fact + join-back (TPC-H Q18)
     "q21_waiting_supplier",  # correlated EXISTS/NOT-EXISTS (TPC-H Q21)
     "join_broadcast",     # 3-way broadcast dim join
@@ -63,170 +58,79 @@ HEADLINE = [
     "topk_per_group",     # join + agg + window
     "window_running",     # running-total window over orders
     "dedup_simhash",      # simhash fingerprints over documents
-    "text_fingerprint",   # sampled-shingle fingerprints (sparse at
-                          # scale).  r11 adjudication (2026-08-16) of
-                          # the r9->r10 creep (0.88->1.19 s): warm
-                          # best-of-2 re-time measured 0.685 s (0.58x
-                          # vs r10) — JVM-band noise, no fix needed
+    "text_fingerprint",   # sampled-shingle fingerprints (sparse at scale)
     "ann_topk_cosine",    # brute-force ANN over embeddings
     "kmeans_clusters",    # iterative Lloyd assignment over embeddings
     "doc_chunking",       # token-window chunking (LLM prep, shuffle-free)
     "win_session",        # session windows over events
-    "embedding_neardup",  # banded-LSH cosine near-dup (the fuzzy-dedup
-                          # representative: bounded candidates by design)
-    "simhash_neardup",    # 64-bit simhash banded near-dup pairs (166k
-                          # true near-dups at sf0.1 — the 16-bit form
-                          # emitted 7.1M birthday-collision pairs and
-                          # was unbenchable; 64 bits fixed the output)
-    "dedup_minhash_ctrl", # MinHash+LSH on the controlled-dup-rate
-                          # derived corpus (large vocab, ~5% true dups)
+    "embedding_neardup",  # banded-LSH cosine near-dup (bounded candidates)
+    "simhash_neardup",    # 64-bit simhash banded near-dup pairs
+    "dedup_minhash_ctrl", # MinHash+LSH on the controlled-dup-rate corpus
     "freq_heavy_hitters", # Misra-Gries sketch pass + exact verify
     "text_bm25_topk",     # BM25 ranked retrieval (inverted-index shape)
     "search_hybrid_rrf",  # BM25 + dense-cosine reciprocal-rank fusion
     "text_lm_bigram_nll", # bigram-LM perplexity gate (CCNet shape)
     "join_bloom_prune",   # Bloom runtime filter ahead of the join
-    # NOT benched (round-10 rebalance, r9 verdict #5): the raw-corpus
-    # curation_pipeline (22 s) + dedup_incremental (20 s) burned 30%
-    # of the r9 bench wall measuring the synthetic table's ~31-word-
-    # vocabulary degeneracy (nearly every pair a TRUE dup — output
-    # mass, not plan cost).  Both stay registered and oracle-checked;
-    # their production certification has always been the controlled-
-    # corpus forms benched here: curation_pipeline_ctrl,
-    # dedup_incremental_ctrl, and dedup_incremental_capped (the
-    # bounded-candidate raw-corpus form).
-    "curation_pipeline_ctrl",  # the curation FLAGSHIP on the
-                          # controlled-dup corpus: the honest
-                          # wall-time of a full gate→exact-dedup→
-                          # fuzzy-dedup→split pass (reference analog:
-                          # the 5-node E2E budget,
-                          # tests/maplejuice.cpp:208-210)
+    # NOT benched: the raw-corpus curation_pipeline and
+    # dedup_incremental.  The synthetic table's ~31-word vocabulary
+    # makes nearly every pair a TRUE dup, so their wall measures output
+    # mass, not plan cost.  Both stay registered and oracle-checked;
+    # the controlled-corpus forms below are benched in their place.
+    "curation_pipeline_ctrl",  # gate→exact→fuzzy dedup→split flagship
     "hard_negative_mining",  # cell-partitioned contrastive mining
-                          # (embedding training-data prep; hyperplane-
-                          # signature cells sized from corpus count —
-                          # SCALE.md round-6 third-decade note)
-    "drift_psi",          # the standing PSI drift monitor — benched
-                          # to show monitoring is ~free (one scan
-                          # into 10 counters)
-    # -- round-8 additions (one-time total-seconds rebaseline: the
-    # round-over-round regression gate keys on per-query deltas, so
-    # new names simply have no delta their first round) --
+    "drift_psi",          # standing PSI drift monitor (one scan)
     "lsh_neardup_prod",   # pinned-knob production near-dup contract
-                          # (planted-twin corpus, exact-recall oracle)
-    "lsh_neardup_adaptive",  # the production entry: corpus-count-
-                          # derived band width (ceil(log2 n)+6).
-                          # r12 adjudication (2026-08-16) of the r11
-                          # 1.45x flag: warm best-of-3 2.923 s — noise
+    "lsh_neardup_adaptive",  # corpus-count-derived band width
     "ann_index_upsert",   # incremental ANN postings maintenance
-                          # (delta-only assignment == full rebuild).
-                          # r12 adjudication (2026-08-16) of the r11
-                          # +26% drift (3.21->4.04 s, untouched code):
-                          # warm best-of-3 2.378 s — noise
-    "prep_pipeline",      # training-data prep flagship: filter ->
-                          # split -> decontaminate -> pack -> report
-                          # in ONE plan
+    "prep_pipeline",      # filter→split→decontaminate→pack in one plan
     "ann_mutual_knn_graph",  # mutual-kNN graph over adaptive cells
-                          # with the provable top-k gram prune
-    "eval_set_builder",   # round-8 FLAGSHIP: gate -> dedup ->
-                          # stratified split -> decontaminate ->
-                          # pack, the eval-side of prep_pipeline
-    "crossmodal_dedup_pipeline",  # round-8 FLAGSHIP: image pHash +
-                          # text simhash pair sets -> multimodal
-                          # drop list in one plan
-    "dedup_incremental_ctrl",  # standing-index steady state on the
-                          # controlled corpus (the honest incremental
-                          # wall; the unbenched raw-corpus variant is
-                          # candidate-degenerate by data design)
-    # -- round-9 additions --
-    "dedup_incremental_capped",  # the bucket-occupancy safety valve:
-                          # the raw degenerate corpus under a bounded
-                          # candidate join (cap^2 per bucket).  r10:
-                          # verify re-keyed on token-set CONTENT
-                          # (jaccard_verify_setdedup) — ~+1.5 s
-                          # constant here buys the third decade
-                          # 15.4x->7.5x (101 s -> 68 s, SCALE.md r10)
-    "domain_quota_curation",  # two-level domain-cap + global-budget
-                          # admission, both running sums bucketed
+    "eval_set_builder",   # eval-side twin of prep_pipeline
+    "crossmodal_dedup_pipeline",  # image pHash + text simhash drop list
+    "dedup_incremental_ctrl",  # standing-index steady state (ctrl corpus)
+    "dedup_incremental_capped",  # raw corpus under a capped candidate join
+    "domain_quota_curation",  # domain-cap + global-budget admission
     "dedup_crosslingual_entities",  # shared-entity fingerprints
-                          # across languages (posting-list-capped
-                          # inverted index)
-    "intradoc_dedup_lines",  # within-doc repeated-line removal —
-                          # pure map, the cheapest curation pass
-    "split_leakage_simhash_ctrl",  # 128-bit 4x32-banded leakage
-                          # audit on the high-entropy ctrl corpus
-                          # (the fourth-decade form)
+    "intradoc_dedup_lines",  # within-doc repeated-line removal (pure map)
+    "split_leakage_simhash_ctrl",  # 128-bit banded split-leakage audit
     "crossmodal_dedup_ctrl",  # 60-bit image + 128-bit text banding
-                          # on the ctrl corpus (fourth-decade form)
-    # -- round-10 additions --
     "pii_checksum_mask",  # Luhn/IBAN checksum-validated PII masking
-                          # (one scan, zero shuffles, SQL folds)
-    "dedup_substring_chains",  # stride-1 shingle-chain substring
-                          # dedup (arbitrary-offset copied passages,
-                          # exact covered-token union, no pair
-                          # emission)
-    "text_strip_markup",  # tag strip + entity decode (the
-                          # extraction stage; one codegen scan)
-    "mm_audio_fingerprint",  # 31-bit energy-delta audio dedup
-                          # through the real WAV codec (third
-                          # modality; Arrow map + one groupBy)
-    # -- round-10-B additions --
-    "dataset_group_kfold_ctrl",  # leakage-safe group k-fold on the
-                          # controlled-dup corpus (CC loop + banded
-                          # LSH edges; raw form quarantined like
-                          # dedup_incremental's)
-    "contamination_fuzzy",  # cross-split MinHash-band paraphrase
-                          # decontamination (banded equi between
-                          # splits, Bayardo-pruned verify)
+    "dedup_substring_chains",  # shingle-chain copied-passage dedup
+    "text_strip_markup",  # tag strip + entity decode (one codegen scan)
+    "mm_audio_fingerprint",  # energy-delta audio dedup via the WAV codec
+    "dataset_group_kfold_ctrl",  # leakage-safe group k-fold
+    "contamination_fuzzy",  # cross-split MinHash-band decontamination
     "dataset_dsir_select",  # DSIR hashed-ngram importance selection
-                          # (256-bucket broadcast weights, TakeOrdered)
-    "aug_word_dropout",   # deterministic dropout augmentation
-                          # (pure scan, zero exchanges)
+    "aug_word_dropout",   # deterministic dropout (pure scan)
     "domain_blocklist_filter",  # suffix-wildcard blocklist
-                          # (exploded-suffix broadcast equi-join)
     "mm_transcript_align",  # chunk→audio-segment forced alignment
-                          # (doc_id equi join + per-chunk window)
-    # -- round-11 additions --
-    "window_ntile_bucketed",  # exact global ntile/percent_rank/
-                          # cume_dist with a PARTITIONED window +
-                          # broadcast prefix-sum offsets (scale-safe
-                          # twin of the window_ntile global-window
-                          # demo, r10 verdict #4)
+    "window_ntile_bucketed",  # exact global ntile via partitioned window
     "mm_interleaved_pack",  # interleaved image+text VLM packing
-                          # (per-shard window, zero global sorts)
-    # -- round-12 additions --
-    "dedup_substring_chains_incr",  # standing-index substring dedup:
-                          # batches shingle only their own docs and
-                          # append mergeable (h, min/max doc_id)
-                          # freq pieces; merge-on-read probe.
-                          # r13: +~0.8 s constant at sf0.1 (3.3->4.1,
-                          # measured twice) — the readout's merge is
-                          # now batch-restricted via a broadcast
-                          # semi-join (2 extra toy-scale jobs), which
-                          # converts readout shuffle from index-scale
-                          # to batch-scale: the fifth-decade marginal
-                          # cost in SCALE.md is what it buys
-    "contamination_incr", # standing eval-set decontamination: frozen
-                          # test-split gram index probed by train
-                          # batches; suppression merged at readout
-    "window_ntile_bucketed_orders",  # the exact-global-rank machinery
-                          # on a FACT table (customer is a pinned
-                          # dimension in the scale decades)
+    "dedup_substring_chains_incr",  # standing-index substring dedup
+    "contamination_incr", # standing eval-set decontamination
+    "window_ntile_bucketed_orders",  # exact global rank on a fact table
 ]
-# NOT here: the round-11 *_sliced forms (dedup_substring_chains_sliced,
+# NOT here: the *_sliced forms (dedup_substring_chains_sliced,
 # dedup_incremental_capped_sliced).  They are disk-bounded EXECUTION
-# variants of queries already benched via their one-shot forms — K
-# sequential passes trading CPU for 1/K peak scratch disk; their
-# certification is the SCALE.md fifth-decade measurements, not sf0.1
-# wall (where the extra scans only re-measure the trade).
-# NOT here: dedup_minhash_lsh / dedup_ngram_jaccard.  They are correct
-# (oracle-green at the driver's sf0.01) but this synthetic corpus has a
-# ~31-word vocabulary, so at sf0.1 nearly every doc pair is a TRUE
-# >=0.8-Jaccard duplicate (ngram: 3.0M qualifying pairs from 5k docs,
-# 128 s even with prefix filtering) — output-quadratic is inherent to
-# the data, not the plan. Real corpora (large vocab, few dups) keep
-# both near-linear; embedding_neardup and simhash_neardup above measure
-# the same bucketed candidate machinery on data with a sane dup rate,
-# and dedup_minhash_ctrl covers MinHash-LSH on a controlled-dup-rate
-# derived corpus (queries/dedup_q.py: _ctrl_corpus).
+# variants of queries benched above in their one-shot forms, measured
+# in SCALE.md's fifth decade, not at sf0.1.
+# NOT here: dedup_minhash_lsh / dedup_ngram_jaccard.  Oracle-green, but
+# on this ~31-word-vocabulary corpus nearly every doc pair at sf0.1 is
+# a TRUE >=0.8-Jaccard duplicate (ngram: 3.0M qualifying pairs from 5k
+# docs), so their wall is output-quadratic by data.  embedding_neardup,
+# simhash_neardup and dedup_minhash_ctrl measure the same bucketed
+# candidate machinery on data with a sane dup rate.
+
+# Data-dominated subset re-timed at a manufactured sf1 (10x sf0.1,
+# tools/scaleup.py, built fresh each run into a scratch dir that is
+# removed at exit).  At sf0.1 most walls sit near the ~0.3 s Spark job
+# floor, so an 8-vs-32-core comparison reads ~1 everywhere; at sf1
+# these queries show the parallelism.
+SF1_SUBSET = [
+    "wordcount", "q1_pricing", "join_sortmerge", "q9_product_profit",
+    "dedup_minhash_ctrl", "simhash_neardup", "text_bm25_topk",
+    "kmeans_clusters", "dedup_substring_chains", "eval_set_builder",
+    "contamination_fuzzy", "crossmodal_dedup_pipeline",
+]
 
 
 def _time_query(spark, registry, name: str, sf_dir: str) -> float:
@@ -234,23 +138,55 @@ def _time_query(spark, registry, name: str, sf_dir: str) -> float:
     registry[name].fn(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    elapsed = round(time.time() - t0, 3)
-    # Measurement hygiene (r13, guide §5): the shared-subtree
-    # localCheckpoints several queries now build persist RDD blocks
-    # that the query itself never unpersists.  60 queries' leftovers
-    # in ONE bench JVM compete with execution memory and each other
-    # (mid-list queries measured slower in full-bench runs than in
-    # isolated A/Bs of identical code).  Dropping them AFTER the wall
-    # is captured keeps every run self-contained: each query still
-    # pays its own checkpoint-build cost inside its timing, and no
-    # query pays for another's leftovers.  Documented in
-    # OPTIMIZATION_r13.md; per-query timing semantics are unchanged.
-    try:
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-    except Exception:
-        pass
+    elapsed = time.time() - t0
+    # Drop the blocks the query's localCheckpoints persisted AFTER the
+    # wall is captured: each query pays its own checkpoint builds, and
+    # none competes with another's leftovers for execution memory.
+    drop_persisted(spark)
     return elapsed
+
+
+def _sf1_times(spark, registry, sf_dir: str) -> list[float] | None:
+    """Wall per SF1_SUBSET name at sf1 built from ``sf_dir``, in list
+    order.  A failure prints its traceback to stderr and returns None,
+    so the contract line still prints."""
+    try:
+        from tools import scaleup
+
+        sf1_dir = scaleup.build(fresh_dir("bench-sf1"), "sf1", src=sf_dir)
+        return [_time_query(spark, registry, n, sf1_dir) for n in SF1_SUBSET]
+    except Exception:
+        traceback.print_exc()
+        return None
+
+
+def format_record(
+    sf,
+    times: dict[str, float],
+    sf1_cpus: int | None = None,
+    sf1_times: list[float] | None = None,
+) -> str:
+    """bench.py's stdout: the sf1 line (when ``sf1_times`` is given),
+    then the contract line.  The driver keeps the last 2000 chars of
+    output, so both lines carry only what it reads."""
+    lines = []
+    if sf1_times is not None:
+        sf1 = [round(t, 2) for t in sf1_times]
+        lines.append({
+            "sf1_cpus": sf1_cpus,
+            "sf1_times": sf1,
+            "sf1_total": round(sum(sf1), 2),
+        })
+    queries = {n: round(t, 2) for n, t in times.items()}
+    lines.append({
+        "metric": "headline_queries_total",
+        "unit": "sec",
+        "best_of": BEST_OF,
+        "sf": sf,
+        "queries": queries,
+        "value": round(sum(queries.values()), 2),
+    })
+    return "\n".join(json.dumps(d, separators=(",", ":")) for d in lines)
 
 
 def main() -> int:
@@ -271,190 +207,23 @@ def main() -> int:
     # warmup: JVM + codegen + FS metadata
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
-    times: dict[str, float] = {}
-    for name in names:
-        times[name] = min(
+    times = {
+        name: min(
             _time_query(spark, registry, name, sf_dir)
             for _ in range(BEST_OF)
         )
-
+        for name in names
+    }
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    out = {
-        "metric": "headline_queries_total",
-        "unit": "sec",
-        "best_of": BEST_OF,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-    }
-    prior, prior_bo = _latest_prior_times()
-    # Deltas only compare like-with-like: a min-of-2 time vs a
-    # single-shot prior differs by the measured ~9-25% noise band
-    # with no code cause, so names whose prior round ran a different
-    # best_of are excluded (count surfaced so a methodology change
-    # is visible in the record, not silent).
-    skipped_bo = sorted(
-        n for n in times if n in prior and prior_bo.get(n, 1) != BEST_OF
+    sf = float(sf) if sf.replace(".", "").isdigit() else sf
+    sf1_times = (
+        _sf1_times(spark, registry, sf_dir)
+        if not args and sf == 0.1
+        else None
     )
-    if skipped_bo:
-        out["delta_skipped_best_of_mismatch"] = len(skipped_bo)
-        prior = {n: t for n, t in prior.items() if n not in skipped_bo}
-    if prior:
-        # self-adjudicate: re-time any >1.5x query once, warm, same
-        # process; report the best of the two (contention passes the
-        # second run, a real regression fails both)
-        flagged = [
-            n
-            for n, t in times.items()
-            if n in prior and prior[n] > 0 and t / prior[n] > 1.5
-        ]
-        retimes: dict[str, list[float]] = {}
-        for name in flagged:
-            t2 = _time_query(spark, registry, name, sf_dir)
-            retimes[name] = [times[name], t2]
-            times[name] = min(times[name], t2)
-        if retimes:
-            out["retimes"] = retimes
-        deltas = {
-            name: round(t / prior[name], 2)
-            for name, t in times.items()
-            if name in prior and prior[name] > 0
-        }
-        # Only NOTABLE deltas go to stdout: the driver's bench record
-        # keeps the last 2000 chars of output, and the full 41-entry
-        # delta map pushed round 8's JSON line past that cap — the
-        # driver recorded an unparseable tail. Full deltas are
-        # derivable from consecutive BENCH_r{N}.json queries maps.
-        out["deltas"] = {
-            n: r for n, r in deltas.items() if r > 1.3 or r < 0.7
-        }
-        out["regressions"] = sorted(
-            name for name, r in deltas.items() if r > 1.5
-        )
-    out["queries"] = times
-    out["value"] = round(sum(times.values()), 3)
-    _bench_sf1_subset(spark, registry, out["sf"], sf_dir, full_run=not args)
-    line = json.dumps(out, separators=(",", ":"))
-    if len(line) > 1900 and "deltas" in out:
-        # last-resort trim to stay inside the driver's capture window
-        out.pop("deltas", None)
-        line = json.dumps(out, separators=(",", ":"))
-    if len(line) > 1900 and "retimes" in out:
-        # a noisy run can flag dozens of retimes (~45 chars each) and
-        # alone overflow the window; keep the count, drop the pairs
-        out["retimes_n"] = len(out.pop("retimes"))
-        line = json.dumps(out, separators=(",", ":"))
-    if len(line) > 1900 and out.get("regressions"):
-        # same insurance for a long >1.5x name list
-        out["regressions_n"] = len(out.pop("regressions"))
-        line = json.dumps(out, separators=(",", ":"))
-    print(line)
+    cpus = spark.sparkContext.defaultParallelism
+    print(format_record(sf, times, cpus, sf1_times))
     return 0
-
-
-# Data-dominated subset re-timed at a manufactured sf1 (10x sf0.1,
-# tools/scaleup.py — deterministic key-shifted replication, built
-# FRESH each invocation in ~3 s and deleted at exit, so nothing
-# persists across runs).  Why (r13 VERDICT #5): at sf0.1 every
-# benched wall sits at the ~0.3 s Spark job floor, so the driver's
-# 8-vs-32-core scaling block reads ≈1 everywhere and cannot show
-# parallelism; at sf1 these ten queries measure 1.3-2.6x across the
-# same core span.  ADDITIVE only: the contract line's metric/value/
-# queries keys are untouched — sf1 numbers land under their own
-# sf1_queries/sf1_total keys (~300 chars, within the driver's 2000-
-# char capture window).
-SF1_SUBSET = [
-    "wordcount", "q1_pricing", "join_sortmerge", "q9_product_profit",
-    "dedup_minhash_ctrl", "simhash_neardup", "text_bm25_topk",
-    "kmeans_clusters", "dedup_substring_chains", "eval_set_builder",
-]
-
-
-def _bench_sf1_subset(
-    spark, registry, sf, sf_dir: str, full_run: bool
-) -> None:
-    """Time SF1_SUBSET at the manufactured sf1 and print the times as
-    their own JSON line (``sf1_cpus``/``sf1_queries``/``sf1_total``),
-    ahead of the contract line.
-
-    Runs only on a full HEADLINE pass over the standard sf0.1 dir
-    (``sf`` is that dir's parsed scale factor; --only iteration runs
-    and foreign SF dirs skip it)."""
-    if not full_run or sf != 0.1:
-        return
-    here = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, os.path.join(here, "tools"))
-    try:
-        import scaleup
-    except Exception:
-        return
-    root = fresh_dir("bench-sf1")
-    try:
-        scaleup.build(root, "sf1", src=sf_dir)
-    except Exception:
-        return
-    sf1_dir = os.path.join(root, "sf1")
-    sf1_times = {
-        name: _time_query(spark, registry, name, sf1_dir)
-        for name in SF1_SUBSET
-        if name in registry
-    }
-    # Its own line, printed BEFORE the contract line: the driver
-    # keeps the last 2000 chars of output, so folding ~290 chars of
-    # sf1 entries into the contract JSON would push IT past the
-    # window (the round-8 unparseable-tail incident); as a separate
-    # preceding line, any overflow truncates sf1 entries from the
-    # front and never touches the contract line.  sf1_total is last
-    # so it survives worst.
-    print(
-        json.dumps(
-            {
-                "sf1_cpus": spark.sparkContext.defaultParallelism,
-                "sf1_queries": sf1_times,
-                "sf1_total": round(sum(sf1_times.values()), 3),
-            },
-            separators=(",", ":"),
-        )
-    )
-
-
-def _latest_prior_times() -> tuple[dict[str, float], dict[str, int]]:
-    """Per-query seconds from the newest BENCH_r{N}.json the driver
-    recorded, for round-over-round regression tracking, PLUS the
-    best_of each query's prior time was measured under.  Only the
-    harness's ``parsed`` record counts; a round whose line did not
-    parse contributes nothing, and older rounds backfill its names.
-
-    The best_of map exists because min-of-N times are systematically
-    below single-shot times by the whole JVM/harness noise band
-    (r11→r12 measured that band at ~9-25%): comparing a best_of=2
-    time against a best_of=1 prior emits spurious deltas in BOTH
-    directions, so the caller skips any pair measured under different
-    best_of (r12 ADVICE).  Rounds before the field existed (≤r11) are
-    single-shot, hence the default of 1."""
-    import glob
-    import re
-
-    rounds: list[tuple[int, dict[str, float], int]] = []
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-            parsed = rec.get("parsed") or {}
-            queries = parsed.get("queries") or {}
-            bo = parsed.get("best_of")
-        except (OSError, json.JSONDecodeError):
-            continue
-        if queries:
-            rounds.append((int(m.group(1)), queries, int(bo or 1)))
-    prior: dict[str, float] = {}
-    prior_bo: dict[str, int] = {}
-    for _, queries, bo in sorted(rounds):  # newest wins per query name
-        prior.update(queries)
-        prior_bo.update({n: bo for n in queries})
-    return prior, prior_bo
 
 
 if __name__ == "__main__":

@@ -83,6 +83,15 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def drop_persisted(spark: SparkSession) -> None:
+    """Unpersist every RDD block the session still holds.  Queries do
+    not unpersist the blocks their ``localCheckpoint``s persist, so a
+    process that runs many queries in one JVM calls this after each
+    query's result is taken."""
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+
+
 def get_spark(
     app_name: str = "distributed-system-spark",
     master: str | None = None,

@@ -1,7 +1,7 @@
-"""Knob tripwire: the environment variables the engine package and
-bench.py read are an explicit allow-list.  A new knob has to be added
-here deliberately, together with the measurement that justifies it;
-prefer deleting a knob to adding one."""
+"""Knob tripwire: the environment variables the engine package,
+bench.py and tools/*.py read are an explicit allow-list.  A new knob
+has to be added here deliberately, together with the measurement that
+justifies it; prefer deleting a knob to adding one."""
 
 from __future__ import annotations
 
@@ -68,7 +68,8 @@ def test_env_knobs_match_allow_list():
     assert env_reads(src) == {"A", "B", "C", "D", "<non-literal key>"}
 
     package = sorted((ROOT / "distributed_system_spark").rglob("*.py"))
-    files = [ROOT / "bench.py", *package]
+    tools = sorted((ROOT / "tools").glob("*.py"))
+    files = [ROOT / "bench.py", *package, *tools]
     by_file = {
         str(p.relative_to(ROOT)): env_reads(p.read_text()) for p in files
     }

@@ -22,7 +22,10 @@ import pandas as pd
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from distributed_system_spark.queries import load_all  # noqa: E402
-from distributed_system_spark.session import get_spark  # noqa: E402
+from distributed_system_spark.session import (  # noqa: E402
+    drop_persisted,
+    get_spark,
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -104,6 +107,8 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark raised {type(exc).__name__}: {exc}")
             continue
+        finally:
+            drop_persisted(spark)
         if q.oracle is None:
             n_rows_only += 1
             print(

@@ -31,7 +31,10 @@ from distributed_system_spark.queries import (  # noqa: E402
     correctness_rounds,
     load_all,
 )
-from distributed_system_spark.session import get_spark  # noqa: E402
+from distributed_system_spark.session import (  # noqa: E402
+    drop_persisted,
+    get_spark,
+)
 
 PLANS_SF_DIR = os.path.join(os.path.dirname(SF_SMOKE_DIR), "sf0.01")
 
@@ -132,13 +135,8 @@ def fingerprints(spark, sf_dir: str = SF_SMOKE_DIR) -> dict[str, str]:
     out = {}
     for name in sorted(registry):
         out[name] = fingerprint(spark, registry[name], sf_dir)
-        _drop_checkpoints(spark)
+        drop_persisted(spark)
     return out
-
-
-def _drop_checkpoints(spark) -> None:
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(False)
 
 
 def write_fingerprints() -> int:
@@ -165,7 +163,7 @@ def final_plans(names: list[str], sf_dir: str):
     spark = get_spark("explain")
     for name in names:
         yield name, plan_text(registry[name].fn(spark, sf_dir))
-        _drop_checkpoints(spark)
+        drop_persisted(spark)
 
 
 def capture(out_dir: str, suffix: str, names: list[str]) -> int:

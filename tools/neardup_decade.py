@@ -17,7 +17,7 @@ known >=0.95 pair population that scales with n.  Planting happens
 distributed (mapInPandas), never via a driver round-trip, so the wall
 measurement stays honest.  Reported per dir:
 
-- wall clock with decade.py's methodology (noop sink, warmup, warm
+- wall clock timed as bench.py times (noop sink, warmup), warm
   best-of-3 at the small dirs, single run at the largest);
 - RECALL vs the exact all-pairs answer on the augmented frame,
   computed blockwise in numpy (float64, rounded to the operator's

@@ -19,8 +19,8 @@ natural pairs — the corpus' own near-dup structure lives at
   natural-pairs premise — reported, and the run is then NOT a full-
   recall certificate); a pair that fails would be an operator bug.
 
-Wall methodology is decade.py's: noop sink, warmup, warm best-of-3
-on both sides.
+Walls are timed as bench.py times them (noop sink, warmup), warm
+best-of-3 on both sides.
 
 Usage: python tools/neardup_planted_recall.py [small_dir large_dir]
 """
